@@ -18,29 +18,8 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outFile = args.headOption.getOrElse("bench.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // AQE coalescing floor: round 15 lowered the default to 16k to keep
-      // CPU-dense small shuffles spread over all cores; the driver's r15
-      // measurements showed that floor INVERTING scaling on five queries
-      // (q79/q89/q108/q49/q265 ran 3–7× slower at local[32] than
-      // local[8] — dozens of tiny partitions across many short stages
-      // cost more in per-task overhead than they buy in parallelism),
-      // and a round-16 A/B (full suite, calm sentinels) measured the
-      // stock floor faster overall (geomean 0.93×). Round 16 restores
-      // the stock 1m default; the env knob remains for ops.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "1m"))
-      // same extensions the gate (Verify) runs under: the optimizer-rule
-      // tier (declarative → kernel rewrites) must be IN the measurement
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = GraftExtensions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: JIT/codegen/parquet-footer costs shouldn't be
     // attributed to whichever query the map happens to order first.
@@ -75,7 +54,8 @@ object Bench {
           try {
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             Some((System.nanoTime() - t0) / 1e9)
-          } catch { case _: Throwable => None }
+          } catch { case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[bench] sentinel rep failed: ${e.getMessage}"); None }
         }
         if (ts.nonEmpty) Some(ts.min) else None
       }
@@ -99,7 +79,7 @@ object Bench {
           val t0 = System.nanoTime()
           val ok =
             try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-            catch { case e: Throwable =>
+            catch { case scala.util.control.NonFatal(e) =>
               System.err.println(s"[bench] $name rep failed: ${e.getMessage}")
               false
             }
@@ -147,7 +127,8 @@ object Bench {
       val nq = """"n_queries"\s*:\s*(\d+)""".r.findFirstMatchIn(txt)
         .map(_.group(1))
       if (sfOk) (tot, nq) else (None, None)
-    } catch { case _: Throwable => (None, None) }
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] duckdb pair not read: ${e.getMessage}"); (None, None) }
     val duckPart = duck match {
       case (Some(t), nq) =>
         s""","duckdb_total":$t,"duckdb_queries":${nq.getOrElse("null")}"""
@@ -192,7 +173,8 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"queries":$qs,"sf":"$sfDir"$duckPart$sentinelPart}"""
     println(line)
     try Files.writeString(Paths.get(outFile), line + "\n")
-    catch { case _: Throwable => () }
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] $outFile not written: ${e.getMessage}") }
     // The driver records a BOUNDED stdout tail: at 213 queries the full
     // line is ~6 KB and its HEAD gets cut, so the driver's JSON parse
     // fails (BENCH_r09's "parsed": null). Emit a compact summary as the

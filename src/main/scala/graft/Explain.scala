@@ -1,29 +1,31 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dev tool: print formatted physical plans for named queries, under
-  * the SAME session shape Bench/Verify run (master from
-  * SPARK_GRAFT_CPUS, graft extensions, AQE coalescing floor) so a
-  * committed plan dump reflects what the bench actually executed.
-  * Usage: SPARK_GRAFT_CPUS=32 runMain graft.Explain <sfDir> <query>... */
+  * the SAME session shape Bench/Verify run ([[GraftExtensions.builder]])
+  * so a committed plan dump reflects what the bench actually executed.
+  * Also knows INTERNAL relations that queries hide behind localCheckpoint
+  * boundaries (a checkpointed feed appears as `Scan ExistingRDD` in the
+  * consumer's plan): chunk_relation (q186/q188 feed), scrubbed (q79/q89
+  * feed), neardup_pairs (q49/q88 feed).
+  * Usage: SPARK_GRAFT_CPUS=32 runMain graft.Explain <sfDir> <name>... */
 object Explain {
+  def plans(spark: SparkSession, sfDir: String): Map[String, () => DataFrame] =
+    SparkEntry.queries.map { case (n, fn) => n -> (() => fn(spark, sfDir)) } ++ Map(
+      "chunk_relation" -> (() => graft.ext.Text.chunkRelationOf(
+        graft.tables.Tables.documents(spark, sfDir))),
+      "scrubbed" -> (() => graft.ext.Corpus.scrubbed(spark, sfDir)),
+      "neardup_pairs" -> (() => graft.ext.Similarity
+        .nearDupLshPairs(spark, sfDir)))
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "1m"))
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = GraftExtensions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>
       println(s"========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      plans(spark, sfDir)(n)().explain("formatted")
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graft.{CosineSimilarity, DotProduct, IntDotProduct, IntMatchCount, IntSquaredDistance, LangId, PortableSimHash, RewriteSortedIntersectCount, RewriteIntDotFold, RollingHash, SimHash, SortedIntersectCount, SquaredDistance}
@@ -10,7 +10,7 @@ import org.apache.spark.sql.graft.{CosineSimilarity, DotProduct, IntDotProduct, 
   * §7.4 build plan):
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
+  * GraftExtensions.builder().getOrCreate() // or .withExtensions(new GraftExtensions)
   * // or: spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
@@ -65,4 +65,22 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "portable_simhash(s) - 60-bit engine-portable SimHash fingerprint",
       es => PortableSimHash(es.head)))
   }
+}
+
+/** The engine's one session shape: every main and the test harness build
+  * through [[builder]], so Verify gates the same plans Bench measures and
+  * the optimizer-rule tier is in both. `cores` defaults to
+  * SPARK_GRAFT_CPUS, else 4. */
+object GraftExtensions {
+  def builder(cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+      : SparkSession.Builder = SparkSession.builder()
+    .master(s"local[$cores]")
+    .config("spark.sql.shuffle.partitions", cores.toString)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true") // Tables.events
+    .config("spark.ui.enabled", "false")
+    // AQE coalescing floor, Spark's stock 1m pinned: round 15's 16k floor
+    // inverted scaling at local[32]; see OPTIMIZATION_r16.md
+    .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
+    .withExtensions(new GraftExtensions)
 }

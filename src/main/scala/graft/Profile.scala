@@ -1,7 +1,8 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicBoolean
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** Dev tool (optimization rounds): per-stage wall/shuffle breakdown for
   * named queries. Each query runs once UNTIMED (codegen/JIT warmup), then
@@ -13,24 +14,17 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.tail.toSeq else Nil
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = GraftExtensions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     case class St(id: Int, name: String, ms: Long, tasks: Int,
       inputMB: Double, shReadMB: Double, shWriteMB: Double)
     val stages = mutable.ArrayBuffer[St]()
-    var collecting = false
+    // set on the main thread, read on the listener-bus thread
+    val collecting = new AtomicBoolean(false)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (collecting) {
+        if (collecting.get) {
           val si = e.stageInfo
           val tm = si.taskMetrics
           val ms = (for { s <- si.submissionTime; c <- si.completionTime }
@@ -49,18 +43,18 @@ object Profile {
       val fn = SparkEntry.queries(n)
       // warmup (untimed)
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[profile] $n warmup failed: ${e.getMessage}") }
       stages.synchronized(stages.clear())
-      collecting = true
+      collecting.set(true)
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[profile] $n failed: ${e.getMessage}") }
       val wall = (System.nanoTime() - t0) / 1e9
       // let straggler stage-completed events drain before snapshotting
       Thread.sleep(200)
-      collecting = false
+      collecting.set(false)
       val snap = stages.synchronized(stages.toVector)
       println(f"===== $n%s wall=$wall%.3f s, ${snap.size}%d stages, " +
         f"sum-stage=${snap.map(_.ms).sum / 1e3}%.3f s =====")

@@ -1,7 +1,8 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Streaming-maintainer micro-bench (round 16): the batch bench never
   * exercises the 22 streaming operators, so optimization rounds had no
@@ -29,18 +30,8 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outFile = args.headOption.getOrElse("stream_bench.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "1m"))
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = GraftExtensions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.streaming.DocStreams
 
@@ -115,7 +106,8 @@ object StreamBench {
       s""""unit":"sec","queries":$qs,"waves":$Waves,"sf":"$sfDir"}"""
     println(line)
     try Files.writeString(Paths.get(outFile), line + "\n")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(e) =>
+      System.err.println(s"[stream-bench] $outFile not written: ${e.getMessage}") }
     spark.stop()
   }
 }

@@ -24,11 +24,6 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   * per-row work dominates the scan (CPU-heavy text/vector kernels) —
   * for scan-dominated aggregations the extra exchange buys nothing. */
 object Par {
-  /** Dev kill-switch for A/B bisection of fan sites (SPARK_GRAFT_FAN=off).
-    * Never set by the driver, so driver rounds always run the guard. */
-  private val enabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_FAN").contains("off")
-
   /** True iff the analyzed plan is a bare file scan under (optional)
     * projections/filters/aliases — the only shape whose `.rdd` partition
     * probe is free. Anything with an exchange, join or aggregate in it
@@ -44,7 +39,7 @@ object Par {
   }
 
   def fan(df: DataFrame): DataFrame = {
-    if (!enabled || df.isStreaming) return df
+    if (df.isStreaming) return df
     if (!isBareScan(df.queryExecution.analyzed)) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     // .rdd plans the frame without executing it; for the narrow base

@@ -33,8 +33,8 @@ object Tables {
     * corpus generator encoded it. Two vintages exist:
     *
     *  - parquet TIMESTAMP(NANOS): Spark 4 rejects it unless
-    *    `spark.sql.legacy.parquet.nanosAsLong=true` (set in every builder —
-    *    Verify/Bench/SparkSpec), which surfaces it as a LONG of epoch-nanos.
+    *    `spark.sql.legacy.parquet.nanosAsLong=true` (set by
+    *    `GraftExtensions.builder`), which surfaces it as a LONG of epoch-nanos.
     *    Truncate to microseconds with integer `div` (epoch-nanos exceed
     *    double's 53-bit mantissa) — exactly what DuckDB does reading the
     *    same file, so oracle comparisons line up.

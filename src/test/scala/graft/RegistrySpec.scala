@@ -165,4 +165,34 @@ class RegistrySpec extends SparkSpec {
     val both = orderedExempt.keySet.intersect(SparkEntry.ordered)
     assert(both.isEmpty, s"exempt AND ordered (pick one): $both")
   }
+
+  test("Explain resolves internal relations and registry queries to " +
+      "formatted physical plans") {
+    import org.apache.spark.sql.execution.FormattedMode
+    val plans = Explain.plans(spark, sf)
+    assert(SparkEntry.queries.keySet.subsetOf(plans.keySet))
+    Seq("chunk_relation", "scrubbed", "neardup_pairs", "q01_pricing")
+      .foreach { n =>
+        val plan = plans(n)().queryExecution.explainString(FormattedMode)
+        assert(plan.contains("== Physical Plan =="), s"$n:\n$plan")
+      }
+  }
+
+  test("only GraftExtensions.builder builds a SparkSession in src/main") {
+    // one session shape: a second builder drifts (cores, AQE floor,
+    // extensions) and the gate stops checking the plans Bench measures
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), root.toAbsolutePath)
+    val builds = "SparkSession\\s*\\.\\s*builder\\b".r
+    val walk = Files.walk(root)
+    val offenders = try walk.iterator.asScala.toSeq.collect {
+      case f: Path if f.toString.endsWith(".scala") &&
+          f.getFileName.toString != "GraftExtensions.scala" &&
+          builds.findFirstIn(Files.readString(f)).nonEmpty => root.relativize(f)
+    } finally walk.close()
+    assert(offenders.isEmpty,
+      s"build sessions through GraftExtensions.builder: ${offenders.mkString(", ")}")
+  }
 }

@@ -12,20 +12,14 @@ object SparkSpec {
     // instead of Spark-internal TestHiveContext (SURVEY.md §7.5).
     val tmp = java.nio.file.Files.createTempDirectory("graft-test").toFile
     System.setProperty("derby.system.home", tmp.getAbsolutePath)
-    val s = SparkSession.builder()
-      .master("local[4]")
+    // match the Verify/Bench sessions: the extension-injected
+    // functions and optimizer rules are part of what the suite tests
+    val s = GraftExtensions.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", s"$tmp/warehouse")
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$tmp/metastore_db;create=true")
       .enableHiveSupport()
-      // match the Verify/Bench sessions: the extension-injected
-      // functions and optimizer rules are part of what the suite tests
-      .withExtensions(new GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
