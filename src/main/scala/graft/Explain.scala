@@ -1,9 +1,13 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
 
 /** Dev tool: print formatted physical plans for named queries, under
   * the SAME session shape Bench/Verify run ([[GraftExtensions.builder]])
   * so a committed plan dump reflects what the bench actually executed.
+  * Each relation is run first, so the printed adaptive plan is the final
+  * one: AQE's runtime rules (coalescing, join demotion, the one-partition
+  * final sort) only show in a plan that has executed.
   * Also knows INTERNAL relations that queries hide behind localCheckpoint
   * boundaries (a checkpointed feed appears as `Scan ExistingRDD` in the
   * consumer's plan): chunk_relation (q186/q188 feed), scrubbed (q79/q89
@@ -18,6 +22,15 @@ object Explain {
       "neardup_pairs" -> (() => graft.ext.Similarity
         .nearDupLshPairs(spark, sfDir)))
 
+  /** Run `df` through its own QueryExecution — every row computed, none
+    * collected — and return its formatted final plan. */
+  def finalPlan(df: DataFrame): String = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("explain"))(
+      qe.executedPlan.execute().foreach(_ => ()))
+    qe.explainString(FormattedMode)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val spark = GraftExtensions.builder().getOrCreate()
@@ -25,7 +38,7 @@ object Explain {
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>
       println(s"========== $n ==========")
-      plans(spark, sfDir)(n)().explain("formatted")
+      println(finalPlan(plans(spark, sfDir)(n)()))
     }
     spark.stop()
   }

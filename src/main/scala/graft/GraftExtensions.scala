@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graft.{CosineSimilarity, DotProduct, IntDotProduct, IntMatchCount, IntSquaredDistance, LangId, PortableSimHash, RewriteSortedIntersectCount, RewriteIntDotFold, RollingHash, SimHash, SortedIntersectCount, SquaredDistance}
+import org.apache.spark.sql.graft.{CosineSimilarity, DotProduct, IntDotProduct, IntMatchCount, IntSquaredDistance, LangId, PortableSimHash, RewriteSortedIntersectCount, RewriteIntDotFold, RollingHash, SimHash, SortSmallResultOnOnePartition, SortedIntersectCount, SquaredDistance}
 
 /** Session-build-time registration of the engine's custom Catalyst
   * expressions (the `SparkSessionExtensions` integration point — SURVEY.md
@@ -31,6 +31,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // kernels where the rewrite is provably value-identical
     e.injectOptimizerRule(_ => RewriteSortedIntersectCount)
     e.injectOptimizerRule(_ => RewriteIntDotFold)
+    // runtime tier: AQE re-optimization once stages have materialized
+    e.injectRuntimeOptimizerRule(_ => SortSmallResultOnOnePartition)
     e.injectFunction(fn("cosine_sim",
       "cosine_sim(a, b) - cosine similarity of two float arrays",
       es => CosineSimilarity(es(0), es(1))))

@@ -1,7 +1,10 @@
 package graft.tables
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shim
+import graft.ops.SessionMemo
 
 /** Parquet loaders for the harness star schema (TESTDATA.md).
   *
@@ -9,18 +12,40 @@ import org.apache.spark.sql.functions._
   * (reference: CollegeScorecard.scala:72 `spark.sql("select * from db.tbl")`)
   * to the driver corpus: one parquet file per table under a scale-factor dir.
   *
+  * Each table is resolved ONCE per (session, path, file stamp), like the
+  * reference's catalog tables: the first [[load]] pays the file listing
+  * and the footer/schema-inference job, later loads reuse that resolved
+  * relation and run no job at all.
+  *
   * Scale note: `spark.read.parquet` gives Spark's vectorized columnar reader;
   * at 100 TB the same call reads a partitioned directory tree and Catalyst
   * performs partition pruning + predicate pushdown automatically — nothing
-  * here assumes single-file inputs.
+  * here assumes single-file inputs. There the listing and footer reads
+  * are what resolution costs, so they are paid once per session instead
+  * of once per query; the stamp check per load is one `stat` of the
+  * table's root path. A table rewritten in place is seen by the next
+  * load as long as the rewrite changes that path's modification time or
+  * length (replacing the file or directory does; editing a part file
+  * inside a directory does not — the catalog's REFRESH TABLE case).
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  private val resolved = new SessionMemo[DataFrame]()
+
+  /** The table as a fresh instance of its once-resolved relation: the
+    * same files and schema, new attribute ids — so two loads of one
+    * table self-join exactly as two independent reads would. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p)
+    Shim.freshRelation(resolved.getOrBuild(spark,
+      s"$path@${st.getModificationTime}:${st.getLen}")(spark.read.parquet(path)))
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = load(s, d, "nation")
@@ -65,7 +90,7 @@ object Tables {
   /** Register every table as a temp view so `spark.sql` works against the
     * corpus — the reference's name-based access idiom
     * (reference: CollegeScorecard.scala:72) without requiring a Hive
-    * metastore. */
+    * metastore. Over already-resolved tables this runs no job. */
   def registerAll(spark: SparkSession, sfDir: String): Unit =
     all.foreach { n =>
       val df = if (n == "events") events(spark, sfDir)

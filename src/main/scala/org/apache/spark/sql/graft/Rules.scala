@@ -1,9 +1,12 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, Cast, Expression, Literal, Size, SortArray}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Repartition, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.adaptive.{LogicalQueryStage, QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, BooleanType, IntegerType, LongType}
 
 /** Optimizer rule:
@@ -140,4 +143,69 @@ object RewriteIntDotFold extends Rule[LogicalPlan] {
         IntDotProduct(a, b,
           ansi = mul.evalContext.evalMode == EvalMode.ANSI)
     }
+}
+
+/** Runtime (AQE) optimizer rule: a query's final global ORDER BY over a
+  * small, already-materialized input sorts on ONE partition —
+  * `Sort(global)` gets a no-shuffle `Repartition(1)` (a `CoalesceExec`)
+  * under it, whose single partition already satisfies the sort's
+  * ordered distribution, so no range exchange is planned.
+  *
+  * A range exchange costs two fixed overheads however few rows it
+  * carries: `RangePartitioner` runs a sampling job that re-executes the
+  * whole child, then the range shuffle itself. On a few-row result that
+  * is half the query's jobs. The rule fires only when the sort's input
+  * fits one partition of the size AQE coalesces shuffle partitions to:
+  *   - the Sort is the plan root, possibly under Project/Filter — the
+  *     query's final ordering (a Sort under a Limit never reaches this
+  *     rule: it plans as `TakeOrderedAndProject`);
+  *   - every leaf below it is a LogicalQueryStage whose stages are all
+  *     materialized, so the sizes below are runtime sizes, not guesses;
+  *   - none of those stages is a range shuffle: when nothing under the
+  *     sort shuffles, its own range exchange is the first stage, and
+  *     by the time it has materialized the sampling is already paid;
+  *   - those stages' runtime bytes, and Catalyst's estimate of the
+  *     sort's input built on them (a join multiplies its sides), are
+  *     both at most `spark.sql.adaptive.advisoryPartitionSizeInBytes`;
+  *   - shuffle-partition coalescing is enabled at all.
+  * Under that bound AQE's parallelism-first coalescing may still spread
+  * the range exchange over up to one partition per core (each at least
+  * 1 MB); the rule gives up that parallelism for one sort task of at
+  * most one advisory partition (64 MB by default) and saves the
+  * sampling job and the shuffle. Larger sorts, including every large
+  * sort at 100 TB, keep the range exchange unchanged. Rows are
+  * identical: a single partition sorted by the same ordering is the
+  * same total order. Injected via
+  * [[graft.GraftExtensions]]; it only runs during execution, so an
+  * unexecuted plan still shows the range exchange. */
+object SortSmallResultOnOnePartition extends Rule[LogicalPlan] {
+
+  private def fitsOnePartition(child: LogicalPlan): Boolean = {
+    val leaves = child.collectLeaves()
+    val stages = leaves.collect {
+      case q: LogicalQueryStage =>
+        q.physicalPlan.collect { case s: QueryStageExec => s }
+    }.flatten
+    val limit = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    conf.getConf(SQLConf.COALESCE_PARTITIONS_ENABLED) &&
+      leaves.forall(_.isInstanceOf[LogicalQueryStage]) &&
+      stages.nonEmpty && stages.forall(_.isMaterialized) &&
+      !stages.exists {
+        case s: ShuffleQueryStageExec =>
+          s.shuffle.outputPartitioning.isInstanceOf[RangePartitioning]
+        case _ => false
+      } &&
+      stages.map(_.getRuntimeStatistics.sizeInBytes).sum <= limit &&
+      child.stats.sizeInBytes <= limit
+  }
+
+  override def apply(plan: LogicalPlan): LogicalPlan = plan match {
+    case p: Project => p.withNewChildren(Seq(apply(p.child)))
+    case f: Filter => f.withNewChildren(Seq(apply(f.child)))
+    // the runtime batch runs to a fixed point: rewrite once
+    case Sort(_, true, Repartition(1, false, _), _) => plan
+    case s @ Sort(_, true, child, _) if fitsOnePartition(child) =>
+      s.copy(child = Repartition(1, shuffle = false, child))
+    case _ => plan
+  }
 }

@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -20,4 +21,15 @@ object Shim {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
+
+  /** A new DataFrame over a fresh instance of `df`'s base relation (a
+    * file scan, as `spark.read` returns it): same relation, new attribute
+    * ids, and no re-resolution — so no file listing or schema job. */
+  def freshRelation(df: DataFrame): DataFrame =
+    df.queryExecution.analyzed match {
+      case r: MultiInstanceRelation => classic.Dataset.ofRows(
+        df.sparkSession.asInstanceOf[classic.SparkSession], r.newInstance())
+      case other => throw new IllegalArgumentException(
+        s"freshRelation needs a base relation, got ${other.nodeName}")
+    }
 }

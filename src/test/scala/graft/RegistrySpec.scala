@@ -168,13 +168,15 @@ class RegistrySpec extends SparkSpec {
 
   test("Explain resolves internal relations and registry queries to " +
       "formatted physical plans") {
-    import org.apache.spark.sql.execution.FormattedMode
     val plans = Explain.plans(spark, sf)
     assert(SparkEntry.queries.keySet.subsetOf(plans.keySet))
     Seq("chunk_relation", "scrubbed", "neardup_pairs", "q01_pricing")
       .foreach { n =>
-        val plan = plans(n)().queryExecution.explainString(FormattedMode)
+        val plan = Explain.finalPlan(plans(n)())
         assert(plan.contains("== Physical Plan =="), s"$n:\n$plan")
+        // a plan with no exchange runs without AQE: no final-plan tag
+        assert(!plan.contains("AdaptiveSparkPlan") ||
+          plan.contains("isFinalPlan=true"), s"$n:\n$plan")
       }
   }
 
