@@ -23,10 +23,15 @@ import graft.ops.SessionMemo
   * here assumes single-file inputs. There the listing and footer reads
   * are what resolution costs, so they are paid once per session instead
   * of once per query; the stamp check per load is one `stat` of the
-  * table's root path. A table rewritten in place is seen by the next
-  * load as long as the rewrite changes that path's modification time or
-  * length (replacing the file or directory does; editing a part file
-  * inside a directory does not — the catalog's REFRESH TABLE case).
+  * table's root path. A table rewritten through that root (a new file or
+  * directory moved over the old one) is seen by the next load. Edits
+  * below the root that leave its modification time and length as they
+  * were are NOT seen within a session: a part file rewritten in place, or
+  * a file added to a partition subdirectory. The session keeps serving
+  * the old file list, so new rows are missed and a deleted part file
+  * fails the read — the catalog's REFRESH TABLE case, and on object
+  * stores a directory's modification time may mean nothing at all.
+  * `TablesSpec` pins the root-rewrite case.
   */
 object Tables {
   val all: Seq[String] = Seq(

@@ -155,7 +155,7 @@ object RewriteIntDotFold extends Rule[LogicalPlan] {
   * carries: `RangePartitioner` runs a sampling job that re-executes the
   * whole child, then the range shuffle itself. On a few-row result that
   * is half the query's jobs. The rule fires only when the sort's input
-  * fits one partition of the size AQE coalesces shuffle partitions to:
+  * is small enough that one task beats that overhead:
   *   - the Sort is the plan root, possibly under Project/Filter — the
   *     query's final ordering (a Sort under a Limit never reaches this
   *     rule: it plans as `TakeOrderedAndProject`);
@@ -166,19 +166,28 @@ object RewriteIntDotFold extends Rule[LogicalPlan] {
   *     by the time it has materialized the sampling is already paid;
   *   - those stages' runtime bytes, and Catalyst's estimate of the
   *     sort's input built on them (a join multiplies its sides), are
-  *     both at most `spark.sql.adaptive.advisoryPartitionSizeInBytes`;
+  *     both at most [[MaxInputBytes]] and at most
+  *     `spark.sql.adaptive.advisoryPartitionSizeInBytes`;
   *   - shuffle-partition coalescing is enabled at all.
-  * Under that bound AQE's parallelism-first coalescing may still spread
-  * the range exchange over up to one partition per core (each at least
-  * 1 MB); the rule gives up that parallelism for one sort task of at
-  * most one advisory partition (64 MB by default) and saves the
-  * sampling job and the shuffle. Larger sorts, including every large
-  * sort at 100 TB, keep the range exchange unchanged. Rows are
-  * identical: a single partition sorted by the same ordering is the
-  * same total order. Injected via
+  * Everything after the last shuffle — the final aggregate as well as
+  * the sort — then runs on one task instead of AQE's parallelism-first
+  * coalesced partitions, which is why the bound is small. Larger sorts,
+  * including every large sort at 100 TB, keep the range exchange
+  * unchanged. Rows are identical: a single partition sorted by the same
+  * ordering is the same total order. Injected via
   * [[graft.GraftExtensions]]; it only runs during execution, so an
   * unexecuted plan still shows the range exchange. */
 object SortSmallResultOnOnePartition extends Rule[LogicalPlan] {
+
+  /** The largest input, in the stages' runtime bytes (uncompressed
+    * shuffle data), measured to sort faster on one task. A final
+    * `groupBy…orderBy` at sf0.1 with the rule on and excluded, 10
+    * alternating pairs per size in one JVM, `local[4]` on a 4-vCPU VM:
+    * one task won 10/10 at 2.8, 5.6 and 7.0 MiB (−28%, −22%, −12%),
+    * tied at 8.4 and 12.6 MiB, and lost at 9.8, 11.2, 14, 28 and 56 MiB
+    * (+5% to +17%). With more cores the range exchange's sort spreads
+    * wider, so the crossover should move down; that is not measured. */
+  val MaxInputBytes: Long = 7L << 20
 
   private def fitsOnePartition(child: LogicalPlan): Boolean = {
     val leaves = child.collectLeaves()
@@ -186,7 +195,8 @@ object SortSmallResultOnOnePartition extends Rule[LogicalPlan] {
       case q: LogicalQueryStage =>
         q.physicalPlan.collect { case s: QueryStageExec => s }
     }.flatten
-    val limit = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val limit = math.min(MaxInputBytes,
+      conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
     conf.getConf(SQLConf.COALESCE_PARTITIONS_ENABLED) &&
       leaves.forall(_.isInstanceOf[LogicalQueryStage]) &&
       stages.nonEmpty && stages.forall(_.isMaterialized) &&

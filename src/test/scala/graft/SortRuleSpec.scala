@@ -1,7 +1,11 @@
 package graft
 
 import org.apache.spark.graft.Jobs
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.graft.SortSmallResultOnOnePartition
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
@@ -13,8 +17,7 @@ import graft.tables.Tables
   * range exchange returns when the rule is excluded. */
 class SortRuleSpec extends SparkSpec {
 
-  private val ruleName =
-    org.apache.spark.sql.graft.SortSmallResultOnOnePartition.ruleName
+  private val ruleName = SortSmallResultOnOnePartition.ruleName
 
   /** A fresh session: conf changes stay local to one test. */
   private def session(conf: (String, String)*): SparkSession = {
@@ -64,6 +67,28 @@ class SortRuleSpec extends SparkSpec {
     assert(rows === expected)
     assert(jobs === 4, plan)
     assert(plan.toLowerCase.contains("rangepartitioning"), plan)
+  }
+
+  test("an input above the one-task bound keeps the range exchange") {
+    // above MaxInputBytes, below the default 64 MB advisory size: only
+    // the measured bound keeps this sort spread over several tasks
+    val s = session()
+    val wide = s.range(0, 500000).groupBy((col("id") % 300000).as("k"))
+      .agg(sum(col("id")).as("v")).orderBy(col("k"))
+    val (rows, jobs, plan) = run(wide)
+    assert(rows.map(_.getLong(0)) === (0L until 300000L))
+    assert(jobs === 4, plan)
+    assert(plan.toLowerCase.contains("rangepartitioning"), plan)
+    val adaptive = wide.queryExecution.executedPlan
+      .asInstanceOf[AdaptiveSparkPlanExec].finalPhysicalPlan
+    def stages(p: SparkPlan): Seq[ShuffleQueryStageExec] =
+      p.collect { case q: ShuffleQueryStageExec => q +: stages(q.plan) }.flatten
+    val bytes = stages(adaptive)
+      .filterNot(_.shuffle.outputPartitioning.isInstanceOf[RangePartitioning])
+      .map(_.getRuntimeStatistics.sizeInBytes).sum
+    assert(bytes > SortSmallResultOnOnePartition.MaxInputBytes, bytes)
+    assert(bytes <= s.sessionState.conf.getConf(
+      SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES), bytes)
   }
 
   test("orderBy-limit still plans TakeOrderedAndProject") {

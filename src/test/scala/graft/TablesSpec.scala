@@ -55,6 +55,30 @@ class TablesSpec extends SparkSpec {
     assert(Tables.nation(spark, d).count() === kept)
   }
 
+  /** The 100 TB layout: a table is a directory of part files. Rewriting
+    * it through its root (a new directory moved over the old one) is
+    * seen by the next load. Edits below the root that leave the root's
+    * stamp unchanged (a part file rewritten in place, a file added to a
+    * partition subdirectory) are not seen within a session. */
+  test("a directory table rewritten through its root is seen by the next load") {
+    val dir = Files.createTempDirectory("graft_tables_dir_")
+    val target = dir.resolve("nation.parquet")
+    val d = dir.toString
+    val nation = spark.read.parquet(s"$sf/nation.parquet")
+    def region(r: Int) = nation.filter(col("n_regionkey") === r)
+    region(0).repartition(2).write.parquet(target.toString)
+    assert(Tables.nation(spark, d).count() === region(0).count())
+    val tmp = dir.resolve("__nation").toString
+    region(1).repartition(2).write.parquet(tmp)
+    val fs = new org.apache.hadoop.fs.Path(d)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(target.toString), true)
+    Files.move(java.nio.file.Paths.get(tmp), target)
+    val after = Tables.nation(spark, d)
+    assert(after.count() === region(1).count())
+    assert(after.filter(col("n_regionkey") =!= 1).count() === 0)
+  }
+
   test("a second registerAll runs no job") {
     val s = spark.newSession()
     Tables.registerAll(s, sf)
