@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Session-keyed memo for shared materialized relations (checkpointed
   * pair feeds, PCA parts, BPE fits, …).
   *
-  * Entries are keyed by (session, data dir). Every access first purges
+  * Entries are keyed by (session, data dir); a stamped lookup also
+  * records the input stamp an entry was built at and rebuilds it in
+  * place when the stamp changes. Every access first purges
   * keys whose owning session has STOPPED: their localCheckpoint blocks
   * died with that session's BlockManager, so holding the DataFrames
   * would strongly pin dead plans (and their checkpoint metadata) for
@@ -27,26 +29,43 @@ final class SessionMemo[V](
     // real stopped session cannot be staged without killing the harness
     private[graft] val isDead: SparkSession => Boolean =
       _.sparkContext.isStopped) {
+  // each value is held with the stamp it was built at
   private val m =
-    new java.util.LinkedHashMap[(SparkSession, String), V](
+    new java.util.LinkedHashMap[(SparkSession, String), (Any, V)](
         16, 0.75f, /* accessOrder = */ true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), V]): Boolean =
-        size() > SessionMemo.MaxEntries
+          e: java.util.Map.Entry[(SparkSession, String), (Any, V)]): Boolean =
+        this.size() > SessionMemo.MaxEntries
     }
 
   def getOrBuild(s: SparkSession, dir: String)(build: => V): V =
+    getOrBuild(s, dir, ())(build)
+
+  /** The (session, dir) entry as built at `stamp`. An entry built at
+    * another stamp is rebuilt and REPLACED, so rewriting an input keeps
+    * one entry per (session, dir): a stamp inside the key would instead
+    * add an entry per rewrite, each pinned until the LRU evicts it. */
+  def getOrBuild(s: SparkSession, dir: String, stamp: Any)(build: => V): V =
     m.synchronized {
       val it = m.keySet.iterator()
       while (it.hasNext) if (isDead(it.next()._1)) it.remove()
       val k = (s, dir)
       val existing = m.get(k)
-      if (existing != null) existing
+      if (existing != null && existing._1 == stamp) existing._2
       else {
         val v = build
-        m.put(k, v)
+        m.put(k, (stamp, v))
         v
       }
+    }
+
+  /** Entries held for `s` under dirs starting with `prefix`, for specs
+    * asserting that a rewrite replaced its entry instead of adding one. */
+  private[graft] def entries(s: SparkSession, prefix: String): Int =
+    m.synchronized {
+      var n = 0
+      m.keySet.forEach(k => if ((k._1 eq s) && k._2.startsWith(prefix)) n += 1)
+      n
     }
 
   /** Live-entry count, for specs asserting the purge actually fires. */

@@ -12,10 +12,11 @@ import graft.ops.SessionMemo
   * (reference: CollegeScorecard.scala:72 `spark.sql("select * from db.tbl")`)
   * to the driver corpus: one parquet file per table under a scale-factor dir.
   *
-  * Each table is resolved ONCE per (session, path, file stamp), like the
-  * reference's catalog tables: the first [[load]] pays the file listing
-  * and the footer/schema-inference job, later loads reuse that resolved
-  * relation and run no job at all.
+  * Each table is resolved ONCE per (session, path) at its file stamp,
+  * like the reference's catalog tables: the first [[load]] pays the file
+  * listing and the footer/schema-inference job, later loads reuse that
+  * resolved relation and run no job at all. A new stamp re-resolves the
+  * table and replaces the session's entry for that path.
   *
   * Scale note: `spark.read.parquet` gives Spark's vectorized columnar reader;
   * at 100 TB the same call reads a partitioned directory tree and Catalyst
@@ -38,18 +39,25 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  private val resolved = new SessionMemo[DataFrame]()
+  private[graft] val resolved = new SessionMemo[DataFrame]()
 
   /** The table as a fresh instance of its once-resolved relation: the
     * same files and schema, new attribute ids — so two loads of one
     * table self-join exactly as two independent reads would. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val p = new Path(path)
+    Shim.freshRelation(resolved.getOrBuild(spark, path,
+      stamp(spark, sfDir, name))(spark.read.parquet(path)))
+  }
+
+  /** The table's file stamp: its root path's modification time and
+    * length, from one `stat`. Memos of artifacts fitted on a table (see
+    * `ext.Model`) rebuild when it changes, as [[load]] re-resolves. */
+  def stamp(spark: SparkSession, sfDir: String, name: String): String = {
+    val p = new Path(s"$sfDir/$name.parquet")
     val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getFileStatus(p)
-    Shim.freshRelation(resolved.getOrBuild(spark,
-      s"$path@${st.getModificationTime}:${st.getLen}")(spark.read.parquet(path)))
+    s"${st.getModificationTime}:${st.getLen}"
   }
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")

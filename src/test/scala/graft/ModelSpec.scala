@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.graft.Jobs
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import graft.ext.Model
 import SparkSpec.spark.implicits._
@@ -42,18 +47,53 @@ class ModelSpec extends SparkSpec {
       "top-20 not ordered by avg_nll descending")
   }
 
+  /** Collect `df`, returning its rows, the jobs the collect ran and its
+    * final physical plan. */
+  private def run(df: DataFrame): (Seq[Row], Int, SparkPlan) = {
+    val (rows, jobs) = Jobs.count(spark.sparkContext)(df.collect().toSeq)
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+      case p => p
+    }
+    (rows, jobs, plan)
+  }
+
+  /** Every node of a final adaptive plan, inside query stages too. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case q: QueryStageExec => nodes(q.plan)
+    case _ => p.children.flatMap(nodes)
+  })
+
   test("q126 spelling gate: join scoring ≡ broadcast-map scoring") {
     // force each spelling with the size bound: 0 → every LM "outgrows"
     // broadcast (join path); MaxValue → always broadcast. The ordered
     // top-20 must agree row-for-row — the gate changes the SHIPPING of
     // the fitted LM, never a score
-    def rows(bound: Long) =
-      Model.lmPerplexityVia(spark, sf, bound).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          r.getLong(3), r.getDouble(4))).toSeq
-    val joined = rows(0L)
+    def spelled(bound: Long) = {
+      val (rows, _, plan) = run(Model.lmPerplexityVia(spark, sf, bound))
+      val bhj = nodes(plan).collect { case j: BroadcastHashJoinExec => j }
+      (rows.map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+        r.getLong(3), r.getDouble(4))), bhj.size, plan)
+    }
+    val (joined, joinedBhj, joinedPlan) = spelled(0L)
+    val (broadcasted, broadcastBhj, broadcastPlan) = spelled(Long.MaxValue)
     assert(joined.length === 20)
-    assert(joined === rows(Long.MaxValue))
+    assert(joined === broadcasted)
+    assert(joinedBhj === 0, joinedPlan)
+    assert(broadcastBhj === 2, broadcastPlan)
+  }
+
+  test("q126 fits once per session: a warm call builds with 0 jobs, " +
+      "acts with <= 4; a cold call runs <= 12") {
+    val cold = spark.newSession()
+    val (_, coldJobs) = Jobs.count(spark.sparkContext)(
+      Model.lmPerplexityFilter(cold, sf).collect())
+    assert(coldJobs <= 12, s"cold q126 ran $coldJobs jobs")
+    val (df, buildJobs) = Jobs.count(spark.sparkContext)(
+      Model.lmPerplexityFilter(cold, sf))
+    assert(buildJobs === 0, "a warm q126 re-ran part of its fit")
+    val (_, actJobs, plan) = run(df)
+    assert(actJobs <= 4, plan)
   }
 
   test("q127: BPE merges recursively (a later round merges an earlier round's token)") {

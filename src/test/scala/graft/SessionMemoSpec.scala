@@ -55,6 +55,19 @@ class SessionMemoSpec extends SparkSpec {
     assert(rebuilt, "eldest entry survived past the cap")
   }
 
+  test("a new stamp rebuilds the entry and replaces it") {
+    val memo = new SessionMemo[String](_ => false)
+    var builds = 0
+    def build(tag: String): String = { builds += 1; tag }
+    assert(memo.getOrBuild(spark, "/a", 1L)(build("v1")) === "v1")
+    assert(memo.getOrBuild(spark, "/a", 1L)(build("again")) === "v1")
+    assert(memo.getOrBuild(spark, "/a", 2L)(build("v2")) === "v2")
+    assert(memo.getOrBuild(spark, "/a", 2L)(build("again")) === "v2")
+    assert(builds === 2)
+    assert(memo.size === 1, "a rewrite added an entry instead of replacing")
+    assert(memo.entries(spark, "/a") === 1)
+  }
+
   test("production memos default to sparkContext.isStopped") {
     // the default predicate is the real liveness check — a live local
     // session must be retained across accesses

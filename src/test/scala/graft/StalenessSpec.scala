@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.{Layout, Similarity}
+import graft.ext.{Layout, Model, Similarity}
 import graft.tables.Tables
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
@@ -19,6 +19,11 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *     the mutated data (oracle-green equivalence: the DuckDB oracle
   *     recomputes from the raw parquet exactly like the plain spark
   *     recomputation here).
+  *
+  * The in-session fit memos (q125's NB model, q126's LM) hold the same
+  * contract within one session: keyed by (session, dir) and rebuilt at
+  * the corpus file's stamp, they refit after a rewrite and replace their
+  * entry instead of adding one.
   */
 class StalenessSpec extends SparkSpec {
 
@@ -138,5 +143,26 @@ class StalenessSpec extends SparkSpec {
     assert(!serve2.exists(_._2 > half),
       "removed vectors still served from the stale index")
     assert(partFiles(idxT) !== files1, "mutation must rebuild the index")
+  }
+
+  test("q125/q126: a corpus replaced in place refits the session's " +
+      "memoized models, keeping one memo entry per (session, dir)") {
+    val dir = copyFixture()
+    val d = dir.toString
+    def answers(s: org.apache.spark.sql.SparkSession) =
+      (Model.nbQualityFilter(s, d).collect().toSeq,
+        Model.lmPerplexityFilter(s, d).collect().toSeq)
+    val (q125, q126) = answers(spark)
+    // keep half the documents: both fits see different seed counts
+    replaceTable(dir, "documents", _.filter(col("doc_id") % 2 === 0))
+    val (fresh125, fresh126) = answers(spark.newSession())
+    assert(fresh125 !== q125, "the rewrite must change q125's answer")
+    assert(fresh126 !== q126, "the rewrite must change q126's answer")
+    val (same125, same126) = answers(spark)
+    assert(same125 === fresh125, "q125 scored against the stale NB fit")
+    assert(same126 === fresh126, "q126 scored against the stale LM fit")
+    assert(Model.nbModelCache.entries(spark, d) === 1)
+    assert(Model.lmFitCache.entries(spark, d) === 1)
+    assert(Tables.resolved.entries(spark, d) === 1)
   }
 }

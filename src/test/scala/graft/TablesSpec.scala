@@ -5,7 +5,7 @@ import org.apache.spark.graft.Jobs
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
 
-/** Each corpus table is resolved once per (session, path, file stamp):
+/** Each corpus table is resolved once per (session, path) at its file stamp:
   * the first load pays the footer/schema job, later loads and view
   * registrations run none, two loads still self-join as independent
   * reads, and a table replaced in place is re-resolved. */
