@@ -2,7 +2,8 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{Shim, SimHash}
+import org.apache.spark.sql.graft.Shim
+import graft.functions.TextFunctions.simhash64
 import graft.tables.Tables
 
 /** Near-duplicate detection — north-star extension (SURVEY.md §7.4).
@@ -287,8 +288,6 @@ object Dedup {
        |FROM sig
        |ORDER BY doc_id""".stripMargin
 
-  def simhash64(c: Column): Column = Shim.column(SimHash(Shim.expression(c)))
-
   /** Hamming-neighbor pairs from a (doc_id, fp) fingerprint frame:
     * candidates via chunk equality (pigeonhole: with `chunks` chunks of
     * `chunkBits` bits, dist ≤ chunks-1 ⇒ ≥1 chunk equal), then exact
@@ -553,7 +552,7 @@ object Dedup {
     * don't OOM), everyone after reads them. The pair relation holds
     * only near-duplicates, orders of magnitude smaller than the corpus
     * at any scale. */
-  private val pairsCache = new graft.ops.SessionMemo[DataFrame]
+  private[graft] val pairsCache = new graft.ops.SessionMemo[DataFrame]
 
   private[graft] def dedupClusterPairs(s: SparkSession, dir: String): DataFrame =
     pairsCache.getOrBuild(s, dir)(
@@ -575,7 +574,7 @@ object Dedup {
     * distributed path is eagerly checkpointed per round already. q58
     * deliberately bypasses the memo — its job IS re-running the
     * big-graph path. */
-  private val clustersCache = new graft.ops.SessionMemo[DataFrame]
+  private[graft] val clustersCache = new graft.ops.SessionMemo[DataFrame]
 
   /** q57 — dedup clusters over the df-capped n-gram-Jaccard pair list. */
   def dedupClusters(s: SparkSession, dir: String): DataFrame =

@@ -63,7 +63,7 @@ object Graph {
     * LSH candidate join per query would dominate the whole family
     * (measured 3.5 s of the 4–5 s per query at sf0.1 — a graph is
     * built once and traversed many times). */
-  private val edgeCache = new graft.ops.SessionMemo[DataFrame]
+  private[graft] val edgeCache = new graft.ops.SessionMemo[DataFrame]
   private def mutualEdges(s: SparkSession, dir: String): DataFrame =
     edgeCache.getOrBuild(s, dir) {
       val pairs = Similarity.mutualPairs(s, dir)

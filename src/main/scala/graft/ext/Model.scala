@@ -85,7 +85,7 @@ object Model {
     * checkpoint the corpus-sized scored relation, only the model. */
   private[graft] val nbModelCache = new graft.ops.SessionMemo[DataFrame]
   private def nbModel(s: SparkSession, dir: String): DataFrame =
-    nbModelCache.getOrBuild(s, dir, Tables.stamp(s, dir, "documents")) {
+    nbModelCache.getOrBuild(s, dir) {
       val (_, cnts, tot, pri) = nbFitInputs(s, dir)
       def qlog(num: Column, den: Column): Column =
         floor(qraw(num, den)).cast("long")
@@ -615,7 +615,7 @@ object Model {
   private[graft] val lmFitCache = new graft.ops.SessionMemo[LmFit]
 
   private def lmFit(s: SparkSession, dir: String): LmFit =
-    lmFitCache.getOrBuild(s, dir, Tables.stamp(s, dir, "documents")) {
+    lmFitCache.getOrBuild(s, dir) {
       val counts = lmCounts(s, dir).localCheckpoint(eager = false)
       val entryBytes = length(col("w1")) + length(col("w2")) + 24 +
         when(col("head"), length(col("w1")) + 24).otherwise(0)
@@ -744,7 +744,7 @@ object Model {
   private val seedFitCache = new graft.ops.SessionMemo[Seq[DataFrame]]
 
   private def seedFit(s: SparkSession, dir: String): Seq[DataFrame] =
-    seedFitCache.getOrBuild(s, dir, Tables.stamp(s, dir, "documents")) {
+    seedFitCache.getOrBuild(s, dir) {
       bpeFit(Tables.documents(s, dir)
         .filter(col("text").isNotNull).filter(seedCol)
         .select(wrapToks(col("text")).as("w")), BpeRounds)

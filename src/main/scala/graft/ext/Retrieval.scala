@@ -293,7 +293,7 @@ object Retrieval {
     * of the JVM across many short-lived sessions (the test-harness
     * pattern). q155/q158 themselves stay UNCACHED: their plans are the
     * contract (PlanShapeSpec locks the partial-TopK shapes). */
-  private val fusedCache = new graft.ops.SessionMemo[DataFrame]
+  private[graft] val fusedCache = new graft.ops.SessionMemo[DataFrame]
 
   private def fusedList(s: SparkSession, dir: String): DataFrame =
     fusedCache.getOrBuild(s, dir) {
@@ -305,7 +305,7 @@ object Retrieval {
   /** Exact int8-dot top-[[MrrTruthK]] per probe query: (query_id, top)
     * with `top` the rank-ordered id array — the ground-truth relation
     * both audits grade against. */
-  private val truthCache = new graft.ops.SessionMemo[DataFrame]
+  private[graft] val truthCache = new graft.ops.SessionMemo[DataFrame]
   private def truthTop(s: SparkSession, dir: String): DataFrame =
     truthCache.getOrBuild(s, dir) {
       exactDotTop(s, dir, MrrTruthK) // the q155 pipeline, truth depth

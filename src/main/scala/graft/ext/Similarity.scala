@@ -2440,7 +2440,7 @@ object Similarity {
     * iterate solved once. vFinal/gram are d- and d²-row relations;
     * quant's blocks are corpus-sized but MEMORY_AND_DISK — they spill,
     * they don't OOM. Keyed by the session object so entries die with
-    * the session; the corpus at `dir` is immutable per harness run. */
+    * the session; a rewrite of `embeddings` rebuilds them. */
   private val pcaPartsCache =
     new graft.ops.SessionMemo[(DataFrame, DataFrame, DataFrame)]
 
@@ -2742,7 +2742,7 @@ object Similarity {
     * (and lineage-truncated) once per (session, dir) — the q88/q112
     * session-cache discipline: the LSH banding is the expensive feed,
     * and every graph query over it re-joins the SAME relation. */
-  private val adjCache = new graft.ops.SessionMemo[DataFrame]
+  private[graft] val adjCache = new graft.ops.SessionMemo[DataFrame]
   private def nearDupAdjacency(s: SparkSession, dir: String): DataFrame =
     adjCache.getOrBuild(s, dir) {
       val pairs = nearDupLshPairs(s, dir)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.graft.{LangId, PortableSimHash, RollingHash, Shim, SimHash}
 
 /** User-facing Column API for the custom text expressions. */
@@ -19,12 +19,4 @@ object TextFunctions {
     * oracle-verifiable fingerprint; see PortableSimHash scaladoc. */
   def portable_simhash(c: Column): Column =
     Shim.column(PortableSimHash(Shim.expression(c)))
-
-  /** Make the functions SQL-callable on a session. */
-  def register(spark: SparkSession): Unit = {
-    Shim.registerFunction(spark, "lang_id", es => LangId(es.head))
-    Shim.registerFunction(spark, "rolling_hash", es => RollingHash(es.head))
-    Shim.registerFunction(spark, "simhash64", es => SimHash(es.head))
-    Shim.registerFunction(spark, "portable_simhash", es => PortableSimHash(es.head))
-  }
 }

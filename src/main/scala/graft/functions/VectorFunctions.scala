@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.graft.{CosineSimilarity, DotProduct, IntDotProduct, IntMatchCount, IntSquaredDistance, Shim, SquaredDistance}
 
 /** User-facing Column API for the custom vector expressions
@@ -24,21 +24,4 @@ object VectorFunctions {
 
   def int_match_count(a: Column, b: Column): Column =
     Shim.column(IntMatchCount(Shim.expression(a), Shim.expression(b)))
-
-  /** Make the functions SQL-callable on a session:
-    * `SELECT cosine_sim(a.embedding, b.embedding) ...`. */
-  def register(spark: SparkSession): Unit = {
-    Shim.registerFunction(spark, "cosine_sim",
-      es => CosineSimilarity(es(0), es(1)))
-    Shim.registerFunction(spark, "dot_product",
-      es => DotProduct(es(0), es(1)))
-    Shim.registerFunction(spark, "squared_distance",
-      es => SquaredDistance(es(0), es(1)))
-    Shim.registerFunction(spark, "int_dot",
-      es => IntDotProduct(es(0), es(1)))
-    Shim.registerFunction(spark, "int_squared_distance",
-      es => IntSquaredDistance(es(0), es(1)))
-    Shim.registerFunction(spark, "int_match_count",
-      es => IntMatchCount(es(0), es(1)))
-  }
 }

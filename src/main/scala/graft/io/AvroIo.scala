@@ -308,9 +308,9 @@ object AvroIo {
 
   /** The documents corpus round-tripped through the Avro sink+source,
     * once per (session, dir) — the q124 write-once discipline; the temp
-    * directory is session-private, so there is no cross-run staleness
-    * to fingerprint. */
-  private val avroDocsCache = new graft.ops.SessionMemo[String]
+    * directory is session-private, and a rewrite of `documents` rebuilds
+    * the copy in a new one. */
+  private[graft] val avroDocsCache = new graft.ops.SessionMemo[String]
   private def avroDocs(s: SparkSession, dir: String): DataFrame = {
     val path = avroDocsCache.getOrBuild(s, dir) {
       val d = graft.ops.TempDirs.create("graft_avro_docs_") // JVM-exit cleaned

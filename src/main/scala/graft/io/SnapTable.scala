@@ -2399,7 +2399,7 @@ object SnapTable {
     * (updates the surviving ones, re-INSERTS the ones v3 deleted). All
     * four predicates are closed-form, so the DuckDB oracle recomputes
     * any version from the raw parquet. */
-  private val snapCache = new graft.ops.SessionMemo[String]
+  private[graft] val snapCache = new graft.ops.SessionMemo[String]
   private def snapDocs(s: SparkSession, dir: String): String =
     snapCache.getOrBuild(s, dir) {
       val d = graft.ops.TempDirs.create("graft_snap_docs_") // JVM-exit cleaned

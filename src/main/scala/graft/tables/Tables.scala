@@ -1,6 +1,5 @@
 package graft.tables
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Shim
@@ -16,7 +15,8 @@ import graft.ops.SessionMemo
   * like the reference's catalog tables: the first [[load]] pays the file
   * listing and the footer/schema-inference job, later loads reuse that
   * resolved relation and run no job at all. A new stamp re-resolves the
-  * table and replaces the session's entry for that path.
+  * table and replaces the session's entry for that path; every other
+  * [[graft.ops.SessionMemo]] whose build loaded the table rebuilds too.
   *
   * Scale note: `spark.read.parquet` gives Spark's vectorized columnar reader;
   * at 100 TB the same call reads a partitioned directory tree and Catalyst
@@ -43,21 +43,14 @@ object Tables {
 
   /** The table as a fresh instance of its once-resolved relation: the
     * same files and schema, new attribute ids — so two loads of one
-    * table self-join exactly as two independent reads would. */
+    * table self-join exactly as two independent reads would. Memo builds
+    * around a load record its path ([[SessionMemo.dependOn]]). */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    Shim.freshRelation(resolved.getOrBuild(spark, path,
-      stamp(spark, sfDir, name))(spark.read.parquet(path)))
-  }
-
-  /** The table's file stamp: its root path's modification time and
-    * length, from one `stat`. Memos of artifacts fitted on a table (see
-    * `ext.Model`) rebuild when it changes, as [[load]] re-resolves. */
-  def stamp(spark: SparkSession, sfDir: String, name: String): String = {
-    val p = new Path(s"$sfDir/$name.parquet")
-    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(p)
-    s"${st.getModificationTime}:${st.getLen}"
+    Shim.freshRelation(resolved.getOrBuild(spark, path) {
+      SessionMemo.dependOn(spark, path)
+      spark.read.parquet(path)
+    })
   }
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")

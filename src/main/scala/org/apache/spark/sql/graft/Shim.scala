@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
+import org.apache.spark.sql.{Column, DataFrame, classic}
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -15,12 +15,6 @@ object Shim {
 
   /** Extract the Catalyst expression backing a Column (classic backend). */
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Register a builder as a SQL-callable function on this session. */
-  def registerFunction(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
 
   /** A new DataFrame over a fresh instance of `df`'s base relation (a
     * file scan, as `spark.read` returns it): same relation, new attribute

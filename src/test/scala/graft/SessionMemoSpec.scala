@@ -1,12 +1,15 @@
 package graft
 
 import graft.ops.SessionMemo
+import graft.tables.Tables
 
-/** The six shared-relation caches (Retrieval fused/truth, Dedup
-  * pairs/clusters, Similarity pcaParts/adjacency, Model seedFit) all
-  * route through [[SessionMemo]]; this spec pins the eviction contract
+/** Every session memo (the resolved tables, the model fits, the
+  * Retrieval/Dedup/Similarity/Graph relations, the io fixtures) routes
+  * through [[SessionMemo]]; this spec pins the eviction contract
   * the round-9 review flagged: entries owned by a stopped session must
-  * become unreachable on the NEXT access, not live for the JVM.
+  * become unreachable on the NEXT access, not live for the JVM — and
+  * the staleness contract: an entry whose build loaded a table rebuilds
+  * in place once that table is rewritten, also through a nested memo.
   *
   * The harness shares one local SparkContext across every spec, so a
   * genuinely stopped session cannot be staged here — the liveness
@@ -55,17 +58,51 @@ class SessionMemoSpec extends SparkSpec {
     assert(rebuilt, "eldest entry survived past the cap")
   }
 
-  test("a new stamp rebuilds the entry and replaces it") {
-    val memo = new SessionMemo[String](_ => false)
+  /** Writes `rows` ids as the parquet table `<dir>/t.parquet`, replacing
+    * any earlier one through its root, as a table rewrite does. */
+  private def writeT(dir: String, rows: Long): Unit =
+    spark.range(rows).write.mode("overwrite").parquet(s"$dir/t.parquet")
+
+  test("a rewritten input table rebuilds the entry and replaces it") {
+    val d = java.nio.file.Files.createTempDirectory("graft_memo_").toString
+    writeT(d, 3)
+    val memo = new SessionMemo[Long](_ => false)
     var builds = 0
-    def build(tag: String): String = { builds += 1; tag }
-    assert(memo.getOrBuild(spark, "/a", 1L)(build("v1")) === "v1")
-    assert(memo.getOrBuild(spark, "/a", 1L)(build("again")) === "v1")
-    assert(memo.getOrBuild(spark, "/a", 2L)(build("v2")) === "v2")
-    assert(memo.getOrBuild(spark, "/a", 2L)(build("again")) === "v2")
-    assert(builds === 2)
+    def rows(): Long = memo.getOrBuild(spark, d) {
+      builds += 1
+      Tables.load(spark, d, "t").count()
+    }
+    assert(rows() === 3 && rows() === 3)
+    assert(builds === 1, "an unchanged table must not rebuild")
+    writeT(d, 5)
+    assert(rows() === 5, "served the value built from the old table")
+    assert(rows() === 5 && builds === 2)
     assert(memo.size === 1, "a rewrite added an entry instead of replacing")
-    assert(memo.entries(spark, "/a") === 1)
+    assert(memo.entries(spark, d) === 1)
+  }
+
+  test("an outer memo rebuilds when the table behind an inner memo it " +
+      "hit is rewritten") {
+    val d = java.nio.file.Files.createTempDirectory("graft_memo_").toString
+    writeT(d, 3)
+    val inner = new SessionMemo[Long](_ => false)
+    val outer = new SessionMemo[Long](_ => false)
+    def innerRows(): Long =
+      inner.getOrBuild(spark, d)(Tables.load(spark, d, "t").count())
+    var outerBuilds = 0
+    def outerRows(): Long = outer.getOrBuild(spark, d) {
+      outerBuilds += 1
+      innerRows() * 10
+    }
+    // the inner entry exists first, so the outer build only HITS it
+    assert(innerRows() === 3)
+    assert(outerRows() === 30 && outerRows() === 30)
+    assert(outerBuilds === 1)
+    writeT(d, 5)
+    assert(outerRows() === 50,
+      "the outer memo missed the table its inner hit depends on")
+    assert(outerBuilds === 2 && innerRows() === 5)
+    assert(outer.entries(spark, d) === 1 && inner.entries(spark, d) === 1)
   }
 
   test("production memos default to sparkContext.isStopped") {

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.{Layout, Model, Similarity}
+import graft.ext.{Dedup, Graph, Layout, Model, Retrieval, Similarity}
+import graft.io.{AvroIo, SnapTable}
 import graft.tables.Tables
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
@@ -20,10 +21,13 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *     recomputes from the raw parquet exactly like the plain spark
   *     recomputation here).
   *
-  * The in-session fit memos (q125's NB model, q126's LM) hold the same
-  * contract within one session: keyed by (session, dir) and rebuilt at
-  * the corpus file's stamp, they refit after a rewrite and replace their
-  * entry instead of adding one.
+  * Every in-session memo holds the same contract within one session:
+  * keyed by (session, dir), each entry records the stamps of the tables
+  * its build loaded, so after a rewrite it rebuilds and replaces its
+  * entry instead of adding one. Pinned here for the fit memos (q125's
+  * NB model, q126's LM) and for the Dedup, Retrieval, Graph,
+  * Similarity, snapshot-table and Avro memos, none of which names the
+  * tables it depends on.
   */
 class StalenessSpec extends SparkSpec {
 
@@ -164,5 +168,36 @@ class StalenessSpec extends SparkSpec {
     assert(Model.nbModelCache.entries(spark, d) === 1)
     assert(Model.lmFitCache.entries(spark, d) === 1)
     assert(Tables.resolved.entries(spark, d) === 1)
+  }
+
+  test("the Dedup, Retrieval, Graph, Similarity, snapshot and Avro memos " +
+      "rebuild in the same session after documents and embeddings change") {
+    val dir = copyFixture()
+    val d = dir.toString
+    val names = Seq("q57_dedup_clusters", "q174_mrr_audit", "q242_graph_bfs",
+      "q160_graph_centrality", "q236_snapshot_stats", "q222_avro_roundtrip")
+    def answers(s: org.apache.spark.sql.SparkSession) = names.map(n =>
+      n -> SparkEntry.queries(n)(s, d).collect().map(_.toString).toSeq.sorted)
+      .toMap
+    val before = answers(spark)
+    replaceTable(dir, "documents", _.filter(col("doc_id") % 2 === 0))
+    val half = Tables.embeddings(spark, d)
+      .agg(max(col("vec_id"))).collect()(0).getLong(0) / 2
+    // dropping the first probe's own vector also changes q174's MRR,
+    // which the halving alone leaves as it was
+    replaceTable(dir, "embeddings", _.filter(col("vec_id") <= half &&
+      col("vec_id") =!= Retrieval.fuseQueryIds.head))
+    val fresh = answers(spark.newSession())
+    val same = answers(spark)
+    names.foreach { n =>
+      assert(fresh(n) !== before(n), s"the rewrite must change $n's answer")
+      assert(same(n) === fresh(n), s"$n served a stale memo")
+    }
+    Seq(Dedup.pairsCache, Dedup.clustersCache, Retrieval.fusedCache,
+      Retrieval.truthCache, Graph.edgeCache, Similarity.adjCache,
+      SnapTable.snapCache, AvroIo.avroDocsCache)
+      .foreach(m => assert(m.entries(spark, d) === 1))
+    Seq("documents", "embeddings").foreach(t =>
+      assert(Tables.resolved.entries(spark, s"$d/$t.parquet") === 1))
   }
 }

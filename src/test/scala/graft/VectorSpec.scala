@@ -34,7 +34,6 @@ class VectorSpec extends SparkSpec {
     // collect() path exercises codegen; eval via filter on literal exercises
     // the interpreted path through constant folding
     val viaSql = {
-      register(spark)
       spark.sql(
         "SELECT cosine_sim(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT), CAST(3.0 AS FLOAT)), " +
           "array(CAST(4.0 AS FLOAT), CAST(5.0 AS FLOAT), CAST(6.0 AS FLOAT)))")
@@ -79,7 +78,6 @@ class VectorSpec extends SparkSpec {
     // SQL-registered functions see arbitrary arrays: a null element must
     // poison the result to NULL (matching aggregate(zip_with(...))), not
     // contribute an arbitrary 0.0 to the partial sum
-    register(spark)
     val rows = spark.sql(
       "SELECT squared_distance(array(CAST(1.0 AS DOUBLE), CAST(NULL AS DOUBLE)), " +
         "  array(CAST(1.0 AS DOUBLE), CAST(2.0 AS DOUBLE))), " +
@@ -124,7 +122,6 @@ class VectorSpec extends SparkSpec {
       assert(r.getLong(2) === r.getLong(3), "int_squared_distance != fold")
     }
     // NULL element poisons; NULL input propagates; length mismatch NULL
-    register(spark)
     val n = spark.sql(
       "SELECT int_dot(array(1L, CAST(NULL AS BIGINT)), array(1L, 2L)), " +
         "int_squared_distance(array(1L, 2L), array(CAST(NULL AS BIGINT), 1L)), " +
