@@ -13,10 +13,6 @@ import org.apache.spark.sql.graft.{CosineSimilarity, DotProduct, IntDotProduct, 
   * GraftExtensions.builder().getOrCreate() // or .withExtensions(new GraftExtensions)
   * // or: spark.sql.extensions=graft.GraftExtensions
   * }}}
-  *
-  * Unlike the per-session `*Functions.register` helpers, extension-injected
-  * functions exist in every session derived from the builder — the right
-  * mechanism when the engine is deployed as a library on a shared cluster.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

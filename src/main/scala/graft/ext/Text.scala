@@ -265,13 +265,14 @@ object Text {
 
   /** The per-source passage-dup report over a chunk relation — split
     * from [[cdcChunks]] so the streaming maintainer serves the SAME
-    * report from its carried state. */
+    * report from its carried state. One pass: `doc_id` is never null, so a
+    * chunk is a dup exactly when min ≠ max `doc_id` over its fp — one window
+    * exchange, not a distinct, count and join back. A hot fp's rows meet in
+    * one window task, which buffers and spills them (q188's [[DfCap]] keys). */
   private[graft] def cdcReportOf(chunks: DataFrame): DataFrame = {
-    val ch = chunks.localCheckpoint(eager = false)
-    val dup = ch.select(col("fp"), col("doc_id")).distinct()
-      .groupBy(col("fp")).agg(count(lit(1)).as("nd"))
-      .filter(col("nd") >= 2).select(col("fp"), lit(true).as("dup"))
-    ch.join(dup, Seq("fp"), "left")
+    val byFp = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
+    chunks.withColumn("dup",
+        min(col("doc_id")).over(byFp) =!= max(col("doc_id")).over(byFp))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_chunks"),
         sum(when(col("dup"), 1L).otherwise(0L)).as("n_dup_chunks"),

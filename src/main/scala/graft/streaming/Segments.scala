@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.Shim
 
 /** Carried maintainer state as CHECKPOINTED SEGMENTS (round 16,
   * optimization guide §1.2/§5).
@@ -17,13 +18,14 @@ import org.apache.spark.sql.DataFrame
   *  - [[append]] checkpoints ONLY the drop-sized delta (the fresh rows
   *    must materialize anyway — they reference the foreachBatch frame,
   *    which is only valid inside the callback);
-  *  - [[view]] is the lazy union of the checkpointed segments — block
-  *    reads, no recompute, value-identical to the monolithic carry
-  *    (same row multiset; every consumer is union-order-independent);
+  *  - [[view]] is ONE scan over the segments' checkpointed RDDs
+  *    ([[Shim.checkpointUnion]]): block reads, no recompute, the monolithic
+  *    carry's row multiset. One leaf at any width keeps a drop's generated
+  *    code equal to the last drop's, so Spark's codegen cache serves it;
   *  - every [[compactEvery]] appends the segments collapse into one
-  *    checkpointed frame, so plan width stays bounded on an unbounded
-  *    stream (amortized O(total/compactEvery) per drop, and the
-  *    ContextCleaner reclaims the replaced segments' blocks).
+  *    checkpoint as wide as the widest segment, bounding the scan's tasks
+  *    on an unbounded stream (amortized O(total/compactEvery) per drop;
+  *    the ContextCleaner reclaims the replaced segments' blocks).
   *
   * Restart/replay semantics are untouched: segments hold exactly the
   * rows the monolithic frame held, callers re-seed from persisted data
@@ -32,11 +34,11 @@ import org.apache.spark.sql.DataFrame
 private[graft] final class Segments private (
     private var segs: Vector[DataFrame], compactEvery: Int) {
 
-  /** The full carried relation: lazy union of checkpointed segments. */
-  def view: DataFrame = segs.reduce(_ unionByName _)
+  /** The full carried relation: one scan over the checkpointed segments. */
+  def view: DataFrame = Shim.checkpointUnion(segs)
 
   /** Checkpoint `fresh` as a new segment (drop-sized write), compact if
-    * the plan is getting wide, and return the updated [[view]]. */
+    * the union is getting wide, and return the updated [[view]]. */
   def append(fresh: DataFrame): DataFrame =
     appendCheckpointed(fresh.localCheckpoint())
 
@@ -45,7 +47,8 @@ private[graft] final class Segments private (
     * per-batch consumers share them) — skips the second checkpoint. */
   def appendCheckpointed(seg: DataFrame): DataFrame = {
     segs = segs :+ seg
-    if (segs.size > compactEvery) segs = Vector(view.localCheckpoint())
+    if (segs.size > compactEvery) segs = Vector(
+      view.coalesce(segs.map(_.rdd.getNumPartitions).max).localCheckpoint())
     view
   }
 
@@ -54,9 +57,9 @@ private[graft] final class Segments private (
 }
 
 private[graft] object Segments {
-  /** Bound on plan width before a compaction pass — wide enough that
-    * compaction cost amortizes to a small constant per drop, narrow
-    * enough that analysis time over the union stays trivial. */
+  /** Appends before a compaction pass — many enough that compaction cost
+    * amortizes to a small constant per drop, few enough that the union's
+    * partition count (tasks per scan) stays small. */
   final val DefaultCompactEvery = 32
 
   def apply(initial: DataFrame,

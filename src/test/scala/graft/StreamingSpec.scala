@@ -1902,9 +1902,62 @@ class StreamingSpec extends SparkSpec {
         s"view diverged after append $i")
       assert(st.width <= 3,
         s"compaction never fired: width ${st.width} after append $i")
+      // a compacted segment is no wider than the widest segment it
+      // replaced (a two-row delta has at most two partitions), so the scan's
+      // task count stays bounded
+      if (st.width == 1) assert(v.rdd.getNumPartitions <= 2,
+        s"compaction kept ${v.rdd.getNumPartitions} partitions")
     }
     // after 5 appends with compactEvery=2 at least one compaction ran,
     // so the state cannot still be 6 segments wide
     assert(st.width < 6)
+  }
+
+  test("segmented maintainer state: the view is one scan whose generated " +
+      "code a later append reuses") {
+    // the view is ONE LogicalRDD over the segments' checkpointed RDDs, not
+    // a Union of N scans: its plan keeps one leaf at any width, so a
+    // same-shape query after an append finds its whole-stage code in
+    // Spark's codegen cache instead of compiling again
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.graft.Shim
+    import graft.streaming.Segments
+    val seed = Seq((0L, "s0")).toDF("id", "src")
+    val st = Segments(seed)
+    var parts = Vector[DataFrame](seed)
+    def rows(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    for (i <- 1 to 5) {
+      val v = st.view
+      assert(v.queryExecution.analyzed.collectLeaves().size === 1,
+        s"width $i: ${v.queryExecution.analyzed.treeString}")
+      assert(rows(v) === rows(parts.reduce(_ unionByName _)), s"width $i")
+      val delta = Seq((i.toLong, s"s$i"), (i + 100L, s"s${i % 2}"))
+        .toDF("id", "src")
+      parts :+= delta
+      st.append(delta)
+    }
+    def agg() = st.view.groupBy(col("src"))
+      .agg(sum(col("id")).as("t"), count(lit(1)).as("n")).collect()
+    agg()
+    st.append(Seq((6L, "s6")).toDF("id", "src"))
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val after = agg()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles === 0,
+      "a same-shape query over a wider view compiled new code")
+    assert(after.map(_.getLong(2)).sum === 12L)
+    // the segments must share one (name, type) list, in order
+    def ck(df: DataFrame) = df.localCheckpoint()
+    intercept[IllegalArgumentException](Shim.checkpointUnion(
+      Seq(ck(seed), ck(Seq(("s1", 1L)).toDF("src", "id")))))
+    intercept[IllegalArgumentException](Shim.checkpointUnion(
+      Seq(ck(seed), ck(Seq((1, "s1")).toDF("id", "src")))))
+    intercept[IllegalArgumentException](Shim.checkpointUnion(Seq(seed)))
+    // a column is nullable when it is nullable in any segment
+    val nullable = ck(Seq((Option(1L), "s1"), (None, "s2")).toDF("id", "src"))
+    assert(!Shim.checkpointUnion(Seq(ck(seed), ck(seed))).schema("id").nullable)
+    assert(Shim.checkpointUnion(Seq(ck(seed), nullable)).schema("id").nullable)
+    assert(Shim.checkpointUnion(Seq(nullable, ck(seed))).schema("id").nullable)
   }
 }

@@ -403,6 +403,48 @@ class TextSpec extends SparkSpec {
     assert(rows.values.map(_._1).sum === chunks.length.toLong)
   }
 
+  test("q186: the one-pass chunk report equals the two-pass spelling") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{count, lit, sum, when}
+    // the report's former spelling: distinct (fp, doc_id), count docs per
+    // fp, join the dup flag back onto every chunk
+    def twoPass(chunks: DataFrame): DataFrame = {
+      val dup = chunks.select(col("fp"), col("doc_id")).distinct()
+        .groupBy(col("fp")).agg(count(lit(1)).as("nd"))
+        .filter(col("nd") >= 2).select(col("fp"), lit(true).as("dup"))
+      chunks.join(dup, Seq("fp"), "left")
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_chunks"),
+          sum(when(col("dup"), 1L).otherwise(0L)).as("n_dup_chunks"),
+          sum(when(col("dup"), col("n_tok")).otherwise(0L))
+            .as("dup_token_mass"))
+        .orderBy(col("source"))
+    }
+    def same(chunks: DataFrame): Unit = {
+      val got = Text.cdcReportOf(chunks)
+      val want = twoPass(chunks)
+      assert(got.schema === want.schema)
+      assert(got.collect().toSeq === want.collect().toSeq)
+    }
+    val chunks = Text.chunkRelationOf(graft.tables.Tables.documents(spark, sf))
+      .localCheckpoint()
+    same(chunks)
+    // over a carried view of three segments, as the maintainer serves it
+    val st = graft.streaming.Segments(chunks.filter(col("doc_id") % 3 === 0))
+    st.append(chunks.filter(col("doc_id") % 3 === 1))
+    same(st.append(chunks.filter(col("doc_id") % 3 === 2)))
+    assert(st.width === 3)
+    // an fp repeated inside one doc is not a duplicate; one shared by two
+    // docs is, in both of its rows
+    val hand = Seq((1L, "a", 0L, 2L, "x"), (1L, "a", 1L, 3L, "x"),
+        (2L, "a", 0L, 4L, "y"), (3L, "b", 0L, 5L, "y"))
+      .toDF("doc_id", "source", "cid", "n_tok", "fp")
+    same(hand)
+    assert(Text.cdcReportOf(hand).collect().map(r => (r.getString(0),
+      r.getLong(1), r.getLong(2), r.getLong(3))).toSeq ===
+      Seq(("a", 3L, 1L, 4L), ("b", 1L, 1L, 5L)))
+  }
+
   test("q188: passage-level source matrix replays driver-side") {
     def bucket(w: String): Long = {
       val d = java.security.MessageDigest.getInstance("MD5")
