@@ -20,12 +20,13 @@ import org.apache.spark.sql.graft.Shim
   *    which is only valid inside the callback);
   *  - [[view]] is ONE scan over the segments' checkpointed RDDs
   *    ([[Shim.checkpointUnion]]): block reads, no recompute, the monolithic
-  *    carry's row multiset. One leaf at any width keeps a drop's generated
-  *    code equal to the last drop's, so Spark's codegen cache serves it;
+  *    carry's row multiset. One leaf keeps a same-shape query's generated
+  *    code equal after an append, so Spark's codegen cache serves it;
   *  - every [[compactEvery]] appends the segments collapse into one
-  *    checkpoint as wide as the widest segment, bounding the scan's tasks
-  *    on an unbounded stream (amortized O(total/compactEvery) per drop;
-  *    the ContextCleaner reclaims the replaced segments' blocks).
+  *    checkpointed frame (the ContextCleaner reclaims the old blocks),
+  *    bounding the segment count on an unbounded stream at amortized
+  *    O(total/compactEvery) per drop. It keeps the segments' summed
+  *    partitions, so nothing bounds the scan's task count yet.
   *
   * Restart/replay semantics are untouched: segments hold exactly the
   * rows the monolithic frame held, callers re-seed from persisted data
@@ -47,8 +48,7 @@ private[graft] final class Segments private (
     * per-batch consumers share them) — skips the second checkpoint. */
   def appendCheckpointed(seg: DataFrame): DataFrame = {
     segs = segs :+ seg
-    if (segs.size > compactEvery) segs = Vector(
-      view.coalesce(segs.map(_.rdd.getNumPartitions).max).localCheckpoint())
+    if (segs.size > compactEvery) segs = Vector(view.localCheckpoint())
     view
   }
 
@@ -57,9 +57,9 @@ private[graft] final class Segments private (
 }
 
 private[graft] object Segments {
-  /** Appends before a compaction pass — many enough that compaction cost
-    * amortizes to a small constant per drop, few enough that the union's
-    * partition count (tasks per scan) stays small. */
+  /** Bound on segment count before a compaction pass — wide enough that
+    * compaction cost amortizes to a small constant per drop, narrow
+    * enough that the per-segment work behind each view stays trivial. */
   final val DefaultCompactEvery = 32
 
   def apply(initial: DataFrame,
