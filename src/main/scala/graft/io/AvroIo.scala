@@ -310,15 +310,8 @@ object AvroIo {
     * once per (session, dir) — the q124 write-once discipline; the temp
     * directory is session-private, and a rewrite of `documents` rebuilds
     * the copy in a new one. */
-  private[graft] val avroDocsCache = new graft.ops.SessionMemo[String]
-  private def avroDocs(s: SparkSession, dir: String): DataFrame = {
-    val path = avroDocsCache.getOrBuild(s, dir) {
-      val d = graft.ops.TempDirs.create("graft_avro_docs_") // JVM-exit cleaned
-      write(graft.tables.Tables.documents(s, dir), d)
-      d
-    }
-    read(s, path)
-  }
+  private def avroDocs(s: SparkSession, dir: String): DataFrame =
+    read(s, graft.tables.Tables.documentsFixture(s, dir, "avro_docs")(write))
 
   /** q222 — per-source corpus stats computed FROM THE AVRO COPY: the
     * documents table flows sink → container files → source → aggregate,

@@ -49,16 +49,12 @@ object JsonlIo {
 
   /** The documents corpus exported to JSONL plus one planted shard of
     * [[CorruptLines]], once per (session, dir). */
-  private val jsonlCache = new graft.ops.SessionMemo[String]
   private def jsonlDocs(s: SparkSession, dir: String): String =
-    jsonlCache.getOrBuild(s, dir) {
-      val d = graft.ops.TempDirs.create("graft_jsonl_docs_") // JVM-exit cleaned
-      graft.tables.Tables.documents(s, dir)
-        .write.mode("overwrite").json(d)
+    graft.tables.Tables.documentsFixture(s, dir, "jsonl_docs") { (docs, d) =>
+      docs.write.mode("overwrite").json(d)
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(d, "part-corrupt.json"),
         CorruptLines.mkString("\n") + "\n")
-      d
     }
 
   /** q248 — JSONL ingest under the value gate: per-source corpus stats

@@ -1,8 +1,10 @@
 package graft.ops
 
-/** Temp directories for session-memoized fixtures (the Avro round-trip
-  * corpus, the SnapTable snapshot tables), cleaned up at JVM exit by
-  * ONE shutdown hook that deletes every registered dir recursively.
+/** Temp directories for session-memoized fixtures, cleaned up at JVM
+  * exit by ONE shutdown hook that deletes every registered dir
+  * recursively. `Tables.documentsFixture` is the one caller in the
+  * engine: it creates each documents-derived table (the Avro and JSONL
+  * copies, the q236–q274 snapshot tables) in its own dir here.
   *
   * Eager deletion on SessionMemo eviction would be wrong — a still-live
   * sibling session can hold lazy plans over the files — so the bound is

@@ -93,6 +93,21 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame =
     load(s, d, "embeddings")
 
+  private[graft] val fixtures = new SessionMemo[String]
+
+  /** A named table derived from `documents` (the Avro and JSONL copies,
+    * the snapshot tables), built once per (session, dir, name): `write`
+    * gets the documents relation and a fresh JVM-exit-cleaned dir, and
+    * fills that dir. The build loads `documents`, so a rewrite of it
+    * rebuilds the fixture in a new dir and replaces the entry. */
+  def documentsFixture(s: SparkSession, dir: String, name: String)(
+      write: (DataFrame, String) => Unit): String =
+    fixtures.getOrBuild(s, s"$dir#$name") {
+      val d = graft.ops.TempDirs.create(s"graft_${name}_")
+      write(documents(s, dir), d)
+      d
+    }
+
   /** Register every table as a temp view so `spark.sql` works against the
     * corpus — the reference's name-based access idiom
     * (reference: CollegeScorecard.scala:72) without requiring a Hive

@@ -1,9 +1,5 @@
 package graft
 
-import graft.ext.{Corpus, Dedup, Graph, Index, Layout, Linkage, Model,
-  Multimodal, Report, Retrieval, Similarity, Text}
-import graft.queries.{Advanced, Core, Olap, Sketches, Subqueries, TpchCanon}
-
 /** Guards on the driver contract itself: the round-2 invariant is that
   * EVERY registered query is oracle-checked, and module maps are merged
   * with `++`, which would silently drop a query on a duplicate key. */
@@ -17,13 +13,7 @@ class RegistrySpec extends SparkSpec {
   }
 
   test("no module silently overwrites another module's query key") {
-    val perModule = Seq(
-      Core.queries, Advanced.queries, Sketches.queries, Subqueries.queries,
-      Similarity.queries, Text.queries, Dedup.queries, Multimodal.queries,
-      Corpus.queries, Linkage.queries, Index.queries, Layout.queries,
-      Model.queries, Report.queries, Retrieval.queries, Olap.queries,
-      TpchCanon.queries, graft.io.AvroIo.queries,
-      graft.io.SnapTable.queries, Graph.queries, graft.io.JsonlIo.queries)
+    val perModule = SparkEntry.modules.map(_._1)
     assert(perModule.map(_.size).sum === SparkEntry.queries.size,
       "duplicate query key across modules (Map ++ dropped one)")
   }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ext.{Dedup, Graph, Layout, Model, Retrieval, Similarity}
-import graft.io.{AvroIo, SnapTable}
 import graft.tables.Tables
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
@@ -25,9 +24,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * keyed by (session, dir), each entry records the stamps of the tables
   * its build loaded, so after a rewrite it rebuilds and replaces its
   * entry instead of adding one. Pinned here for the fit memos (q125's
-  * NB model, q126's LM) and for the Dedup, Retrieval, Graph,
-  * Similarity, snapshot-table and Avro memos, none of which names the
-  * tables it depends on.
+  * NB model, q126's LM), for the Dedup, Retrieval, Graph and
+  * Similarity memos, and for the documents fixtures (snapshot tables,
+  * Avro and JSONL copies), none of which names the tables it depends
+  * on.
   */
 class StalenessSpec extends SparkSpec {
 
@@ -175,7 +175,8 @@ class StalenessSpec extends SparkSpec {
     val dir = copyFixture()
     val d = dir.toString
     val names = Seq("q57_dedup_clusters", "q174_mrr_audit", "q242_graph_bfs",
-      "q160_graph_centrality", "q236_snapshot_stats", "q222_avro_roundtrip")
+      "q160_graph_centrality", "q236_snapshot_stats", "q222_avro_roundtrip",
+      "q241_snapshot_optimize", "q248_jsonl_ingest")
     def answers(s: org.apache.spark.sql.SparkSession) = names.map(n =>
       n -> SparkEntry.queries(n)(s, d).collect().map(_.toString).toSeq.sorted)
       .toMap
@@ -194,9 +195,11 @@ class StalenessSpec extends SparkSpec {
       assert(same(n) === fresh(n), s"$n served a stale memo")
     }
     Seq(Dedup.pairsCache, Dedup.clustersCache, Retrieval.fusedCache,
-      Retrieval.truthCache, Graph.edgeCache, Similarity.adjCache,
-      SnapTable.snapCache, AvroIo.avroDocsCache)
+      Retrieval.truthCache, Graph.edgeCache, Similarity.adjCache)
       .foreach(m => assert(m.entries(spark, d) === 1))
+    // q236's snapshot, q241's optimized copy, the Avro and the JSONL copy:
+    // each rewrite replaced its fixture instead of adding one
+    assert(Tables.fixtures.entries(spark, s"$d#") === 4)
     Seq("documents", "embeddings").foreach(t =>
       assert(Tables.resolved.entries(spark, s"$d/$t.parquet") === 1))
   }
