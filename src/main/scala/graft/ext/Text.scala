@@ -202,65 +202,24 @@ object Text {
     * token mass — the passage-level dup rate q114's in-doc spans and
     * q22's whole-doc hash both miss.
     *
-    * Scale shape: the token explode is the price any tokenizer pass
-    * pays (linear, in-partition); the chunk-id running sum is a
-    * doc-keyed window (q16's sessionize shape); chunk assembly sorts
-    * ≤chunk-length structs IN-AGGREGATE (q166's replan-proof rule);
-    * only 16-byte fingerprints shuffle for the cross-doc df count
-    * (two-phase distinct, q36's rule), and the per-source rollup
-    * exchanges #sources groups. */
+    * Scale shape: the chunker is one in-row kernel
+    * ([[org.apache.spark.sql.graft.CdcChunks]]: one md5 per token, one per
+    * chunk) and one explode of its chunks, with no exchange and no
+    * checkpoint (a chunk never crosses a document); only 16-byte
+    * fingerprints shuffle, once, for the one-window dup flag of
+    * [[cdcReportOf]], and the per-source rollup exchanges #sources
+    * groups. */
   /** The CDC chunk relation (doc_id, source, cid, n_tok, fp) of a
     * document set — per-doc, so a streaming drop chunks independently
     * of everything already indexed ([[graft.streaming.DocStreams
-    * .maintainChunkIndex]] relies on exactly that). */
+    * .maintainChunkIndex]] relies on exactly that). Boundary rule:
+    * md5 bucket mod 8 (see [[org.apache.spark.sql.graft.CdcChunks]]). */
   private[graft] def chunkRelationOf(docs: DataFrame): DataFrame = {
-    // IN-ROW chunker (round 16, guide §2.4 "remove shuffles outright").
-    // The previous spelling exploded every token, ran the cid prefix-sum
-    // as a doc-keyed window and re-assembled chunks with a second
-    // token-granularity groupBy — TWO full-corpus exchanges at token
-    // granularity (at 100 TB, every token through the wire twice). A
-    // chunk never crosses a document, so the whole computation is
-    // per-row: boundary positions via a filtered position sequence,
-    // chunk spans via an indexed transform over them, fingerprints via
-    // slice + concat_ws — zero exchanges, same md5-per-token work,
-    // identical (doc_id, source, cid, n_tok, fp) values.
-    // Both intermediates are materialized behind checkpoint barriers
-    // (the ngramIndexOf split-inlining rule): without them
-    // CollapseProject inlines `tokens(text)` into every element_at of
-    // the boundary filter (O(L²) re-split) and the whole boundary
-    // filter into every per-chunk end-probe (O(chunks·L) repeated md5
-    // passes) — measured 22 s vs ~1 s at sf0.1.
-    val toks = docs
-      .select(col("doc_id"), col("source"), tokens(col("text")).as("w"))
-      .localCheckpoint(eager = false)
-    // 1-based positions whose token STARTS a new chunk (md5 bucket 0);
-    // token i's cid = #boundaries at positions <= i (the old prefix sum)
-    val withB = toks.select(col("doc_id"), col("source"), col("w"),
-        filter(sequence(lit(1), size(col("w"))),
-          p => md5Bucket(element_at(col("w"), p), 8L) === 0L).as("bpos"))
-      .localCheckpoint(eager = false)
-    val n = size(col("w"))
-    val bpos = col("bpos")
-    // chunk 0 (tokens before the first boundary) exists iff pos 1 is not
-    // itself a boundary; boundary k (1-based) starts chunk cid=k
-    // try_element_at: past-the-end probes must yield NULL (ANSI mode's
-    // element_at throws), feeding the coalesce(..., n) "last chunk runs
-    // to the end" default
-    val head = when(coalesce(try_element_at(bpos, lit(1)), lit(0)) =!= 1,
-      array(struct(lit(0L).as("cid"), lit(1).as("s"),
-        coalesce(try_element_at(bpos, lit(1)) - 1, n).as("e"))))
-      .otherwise(array().cast("array<struct<cid:bigint,s:int,e:int>>"))
-    val rest = transform(bpos, (b, i) =>
-      struct((i + 1).cast("long").as("cid"), b.as("s"),
-        coalesce(try_element_at(bpos, i + 2) - 1, n).as("e")))
-    withB
-      .select(col("doc_id"), col("source"), col("w"),
-        explode(concat(head, rest)).as("c"))
+    import org.apache.spark.sql.graft.{CdcChunks, Shim}
+    val chunks = Shim.column(CdcChunks(Shim.expression(tokens(col("text"))), 8L))
+    docs.select(col("doc_id"), col("source"), explode(chunks).as("c"))
       .select(col("doc_id"), col("source"), col("c.cid").as("cid"),
-        (col("c.e") - col("c.s") + 1).cast("long").as("n_tok"),
-        md5(concat_ws(" ",
-          slice(col("w"), col("c.s"), col("c.e") - col("c.s") + 1)))
-          .as("fp"))
+        col("c.n_tok").as("n_tok"), col("c.fp").as("fp"))
   }
 
   /** The per-source passage-dup report over a chunk relation — split

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.streaming.LocalCheckpointFiles.startEach
 
 /** Streaming document-pipeline operators — the streaming twins of the
   * corpus-hygiene batch queries, for pipelines that ingest crawl drops
@@ -21,6 +22,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * operators are for when per-KEY state must persist ACROSS batches
   * (sessions, dedup windows — see [[EventStreams]]); an admission gate
   * does not.
+  *
+  * Every operator here starts its query through
+  * [[LocalCheckpointFiles.startEach]], which puts the stream's checkpoint
+  * logs (source log, offsets WAL, commit log) on [[LocalCheckpointFiles]]
+  * unless the session already names a checkpoint manager: on local disk
+  * a trigger's three log writes then take ~1 ms each, not ~25 ms of
+  * forked `chmod`/`readlink` calls.
   */
 object DocStreams {
 
@@ -44,12 +52,9 @@ object DocStreams {
     * here it is parameterized so the spec can collect the verdicts. */
   def gatedIngest(docStream: DataFrame, corpusShingles: DataFrame,
       checkpointDir: String)(sink: (DataFrame, Long) => Unit): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.ext.Corpus.ingestGateOf(batch, corpusShingles), batchId)
-      }
-      .start()
+    startEach(docStream, Some(checkpointDir)) { (batch, batchId) =>
+      sink(graft.ext.Corpus.ingestGateOf(batch, corpusShingles), batchId)
+    }
 
   /** Start the streaming MinHash-banding admission gate — q113's twin
     * (graft.ext.Dedup.minhashGate): each micro-batch of incoming docs is
@@ -61,12 +66,9 @@ object DocStreams {
     * wave while the gate is down). */
   def gatedNearDup(docStream: DataFrame, corpusBands: DataFrame,
       checkpointDir: String)(sink: (DataFrame, Long) => Unit): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.ext.Dedup.minhashGateOf(batch, corpusBands), batchId)
-      }
-      .start()
+    startEach(docStream, Some(checkpointDir)) { (batch, batchId) =>
+      sink(graft.ext.Dedup.minhashGateOf(batch, corpusBands), batchId)
+    }
 
   /** File-based embedding stream (new parquet files = new vector drops),
     * schema of TESTDATA.md embeddings. */
@@ -105,16 +107,13 @@ object DocStreams {
       checkpointDir: String, k: Int = 3)(
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val index = Segments(initialIndex)
-    vecStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fresh = graft.ext.Similarity.lshIndexOf(batch)
-          .join(index.view.select("vec_id").distinct(), Seq("vec_id"),
-            "left_anti")
-        sink(graft.ext.Similarity.knnLshServe(index.append(fresh), k),
-          batchId)
-      }
-      .start()
+    startEach(vecStream, Some(checkpointDir)) { (batch, batchId) =>
+      val fresh = graft.ext.Similarity.lshIndexOf(batch)
+        .join(index.view.select("vec_id").distinct(), Seq("vec_id"),
+          "left_anti")
+      sink(graft.ext.Similarity.knnLshServe(index.append(fresh), k),
+        batchId)
+    }
   }
 
   /** Start streaming BM25-index maintenance — the LEXICAL twin of
@@ -144,21 +143,18 @@ object DocStreams {
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val tfcState = Segments(initialTfc)
     val lensState = Segments(initialLens)
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (freshTfc, freshLens) = graft.ext.Index.bm25IndexOf(batch)
-        // `known` reads the PRE-append lens view for both anti-joins,
-        // exactly like the monolithic carry did
-        val known = lensState.view.select("doc_id").distinct()
-        val tfc = tfcState.append(
-          freshTfc.join(known, Seq("doc_id"), "left_anti"))
-        val lens = lensState.append(
-          freshLens.join(known, Seq("doc_id"), "left_anti"))
-        sink(graft.ext.Index.bm25ServeFrom(batch.sparkSession, tfc, lens),
-          batchId)
-      }
-      .start()
+    startEach(docStream, Some(checkpointDir)) { (batch, batchId) =>
+      val (freshTfc, freshLens) = graft.ext.Index.bm25IndexOf(batch)
+      // `known` reads the PRE-append lens view for both anti-joins,
+      // exactly like the monolithic carry did
+      val known = lensState.view.select("doc_id").distinct()
+      val tfc = tfcState.append(
+        freshTfc.join(known, Seq("doc_id"), "left_anti"))
+      val lens = lensState.append(
+        freshLens.join(known, Seq("doc_id"), "left_anti"))
+      sink(graft.ext.Index.bm25ServeFrom(batch.sparkSession, tfc, lens),
+        batchId)
+    }
   }
 
   /** Start streaming Merkle-manifest maintenance — q166's
@@ -183,22 +179,19 @@ object DocStreams {
     val fpsState = Segments(initialFps)
     var shards = graft.ext.Layout.manifestShardsOf(fpsState.view)
       .localCheckpoint()
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fresh = graft.ext.Layout.manifestFingerprints(batch)
-          .join(fpsState.view.select("doc_id").distinct(), Seq("doc_id"),
-            "left_anti")
-          .localCheckpoint()
-        val fps = fpsState.appendCheckpointed(fresh)
-        val touched = fresh.select("sh").distinct()
-        val recomputed = graft.ext.Layout.manifestShardsOf(
-          fps.join(touched, Seq("sh")))
-        shards = shards.join(touched, Seq("sh"), "left_anti")
-          .unionByName(recomputed).localCheckpoint()
-        sink(graft.ext.Layout.manifestAssemble(shards), batchId)
-      }
-      .start()
+    startEach(docStream, Some(checkpointDir)) { (batch, batchId) =>
+      val fresh = graft.ext.Layout.manifestFingerprints(batch)
+        .join(fpsState.view.select("doc_id").distinct(), Seq("doc_id"),
+          "left_anti")
+        .localCheckpoint()
+      val fps = fpsState.appendCheckpointed(fresh)
+      val touched = fresh.select("sh").distinct()
+      val recomputed = graft.ext.Layout.manifestShardsOf(
+        fps.join(touched, Seq("sh")))
+      shards = shards.join(touched, Seq("sh"), "left_anti")
+        .unionByName(recomputed).localCheckpoint()
+      sink(graft.ext.Layout.manifestAssemble(shards), batchId)
+    }
   }
 
   /** CDC-chunk-index maintenance — q186's continuous twin: each drop is
@@ -214,15 +207,12 @@ object DocStreams {
       checkpointDir: String)(
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val chunks = Segments(initialChunks)
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fresh = graft.ext.Text.chunkRelationOf(batch)
-          .join(chunks.view.select("doc_id").distinct(), Seq("doc_id"),
-            "left_anti")
-        sink(graft.ext.Text.cdcReportOf(chunks.append(fresh)), batchId)
-      }
-      .start()
+    startEach(docStream, Some(checkpointDir)) { (batch, batchId) =>
+      val fresh = graft.ext.Text.chunkRelationOf(batch)
+        .join(chunks.view.select("doc_id").distinct(), Seq("doc_id"),
+          "left_anti")
+      sink(graft.ext.Text.cdcReportOf(chunks.append(fresh)), batchId)
+    }
   }
 
   /** Video-frame-index maintenance — q226's continuous twin, the
@@ -247,16 +237,13 @@ object DocStreams {
       checkpointDir: String)(
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val hashes = Segments(initialHashes)
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fresh = graft.ext.Multimodal.videoFrameHashesOf(batch)
-          .join(hashes.view.select("doc_id").distinct(), Seq("doc_id"),
-            "left_anti")
-        sink(graft.ext.Multimodal.frameNearDupFrom(hashes.append(fresh)),
-          batchId)
-      }
-      .start()
+    startEach(docStream, Some(checkpointDir)) { (batch, batchId) =>
+      val fresh = graft.ext.Multimodal.videoFrameHashesOf(batch)
+        .join(hashes.view.select("doc_id").distinct(), Seq("doc_id"),
+          "left_anti")
+      sink(graft.ext.Multimodal.frameNearDupFrom(hashes.append(fresh)),
+        batchId)
+    }
   }
 
   /** Start streaming incremental dedup-cluster maintenance — q112's
@@ -288,27 +275,24 @@ object DocStreams {
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val sigsState = Segments(initialSigs)
     var labels = initialLabels.localCheckpoint()
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // redelivery guard: a replayed batch (restart re-seed already
-        // contains it) must not union its signatures into the carried
-        // index twice — labels stay correct either way (idempotent
-        // merge), but duplicated STATE rows would inflate every later
-        // candidate join for the stream's lifetime
-        val batchSigs = graft.ext.Dedup.signatures(batch)
-          .join(sigsState.view
-              .select(org.apache.spark.sql.functions.col("doc_id")),
-            Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        val index = sigsState.appendCheckpointed(batchSigs)
-        val dropPairs =
-          graft.ext.Dedup.minhashPairsAgainst(batchSigs, index, minEst)
-        labels = graft.ext.Dedup.incrementalClusterMerge(labels, dropPairs)
-          .localCheckpoint()
-        sink(labels, batchId)
-      }
-      .start()
+    startEach(docStream, Some(checkpointDir)) { (batch, batchId) =>
+      // redelivery guard: a replayed batch (restart re-seed already
+      // contains it) must not union its signatures into the carried
+      // index twice — labels stay correct either way (idempotent
+      // merge), but duplicated STATE rows would inflate every later
+      // candidate join for the stream's lifetime
+      val batchSigs = graft.ext.Dedup.signatures(batch)
+        .join(sigsState.view
+            .select(org.apache.spark.sql.functions.col("doc_id")),
+          Seq("doc_id"), "left_anti")
+        .localCheckpoint()
+      val index = sigsState.appendCheckpointed(batchSigs)
+      val dropPairs =
+        graft.ext.Dedup.minhashPairsAgainst(batchSigs, index, minEst)
+      labels = graft.ext.Dedup.incrementalClusterMerge(labels, dropPairs)
+        .localCheckpoint()
+      sink(labels, batchId)
+    }
   }
 
   /** Start streaming MUTUAL-kNN GRAPH maintenance — the graph twin of
@@ -348,29 +332,26 @@ object DocStreams {
       initialVecs.select(col("vec_id")),
       initialVecs.select(col("vec_id"), col("embedding")))
       .localCheckpoint()
-    vecStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fresh = Similarity.ndIndexOf(batch)
-          .join(indexState.view.select("vec_id").distinct(), Seq("vec_id"),
-            "left_anti")
-          .localCheckpoint() // feeds the append AND the affected probe
-        val index = indexState.appendCheckpointed(fresh)
-        val affected = index.select(col("vec_id"), col("tbl"),
-            col("bucket"))
-          .join(fresh.select(col("tbl"), col("bucket")).distinct(),
-            Seq("tbl", "bucket"))
-          .select(col("vec_id")).distinct()
-          .localCheckpoint() // feeds the re-rank AND the carry anti-join
-        val refreshed = Similarity.lshTopKFor(index, affected)
-        topk = topk
-          .join(affected.withColumnRenamed("vec_id", "query_id"),
-            Seq("query_id"), "left_anti")
-          .unionByName(refreshed)
-          .localCheckpoint()
-        sink(Similarity.mutualPairsFromTopK(topk), batchId)
-      }
-      .start()
+    startEach(vecStream, Some(checkpointDir)) { (batch, batchId) =>
+      val fresh = Similarity.ndIndexOf(batch)
+        .join(indexState.view.select("vec_id").distinct(), Seq("vec_id"),
+          "left_anti")
+        .localCheckpoint() // feeds the append AND the affected probe
+      val index = indexState.appendCheckpointed(fresh)
+      val affected = index.select(col("vec_id"), col("tbl"),
+          col("bucket"))
+        .join(fresh.select(col("tbl"), col("bucket")).distinct(),
+          Seq("tbl", "bucket"))
+        .select(col("vec_id")).distinct()
+        .localCheckpoint() // feeds the re-rank AND the carry anti-join
+      val refreshed = Similarity.lshTopKFor(index, affected)
+      topk = topk
+        .join(affected.withColumnRenamed("vec_id", "query_id"),
+          Seq("query_id"), "left_anti")
+        .unionByName(refreshed)
+        .localCheckpoint()
+      sink(Similarity.mutualPairsFromTopK(topk), batchId)
+    }
   }
 
   /** EXACTLY-ONCE streaming ingest into a [[graft.io.SnapTable]]: each
@@ -390,13 +371,10 @@ object DocStreams {
   def maintainSnapshotIngest(docStream: DataFrame, tableDir: String,
       checkpointDir: String)(
       onCommit: (Long, Boolean) => Unit): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onCommit(batchId,
-          graft.io.SnapTable.appendOnce(batch, tableDir, batchId))
-      }
-      .start()
+    startEach(docStream, Some(checkpointDir)) { (batch, batchId) =>
+      onCommit(batchId,
+        graft.io.SnapTable.appendOnce(batch, tableDir, batchId))
+    }
 
   /** EXACTLY-ONCE streaming ingest + INCREMENTAL VIEW MAINTENANCE: each
     * micro-batch commits via [[graft.io.SnapTable.appendOnce]] like
@@ -417,19 +395,16 @@ object DocStreams {
       : StreamingQuery = {
     var state = Map.empty[String, (Long, Long)]
     var foldedV = 0
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        import graft.io.SnapTable
-        val committed = SnapTable.appendOnce(batch, tableDir, batchId)
-        val cur = SnapTable.currentVersion(s, tableDir)
-        state = SnapTable.ivmFoldSourceStats(s, tableDir, foldedV, cur,
-          state)
-        foldedV = cur
-        onReport(batchId, committed, state)
-      }
-      .start()
+    startEach(docStream, Some(checkpointDir)) { (batch, batchId) =>
+      val s = batch.sparkSession
+      import graft.io.SnapTable
+      val committed = SnapTable.appendOnce(batch, tableDir, batchId)
+      val cur = SnapTable.currentVersion(s, tableDir)
+      state = SnapTable.ivmFoldSourceStats(s, tableDir, foldedV, cur,
+        state)
+      foldedV = cur
+      onReport(batchId, committed, state)
+    }
   }
 
   /** One emitted CDC event row: the key-level change counts of a
@@ -525,44 +500,41 @@ object DocStreams {
       if (fromVersion > 0) fromVersion
       else readFeedCursor(docStream.sparkSession, checkpointDir)
         .getOrElse(fromVersion)
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        import graft.io.SnapTable
-        val committed = SnapTable.appendOnce(batch, tableDir, batchId)
-        val cur = SnapTable.currentVersion(s, tableDir)
-        val events =
-          if (cur <= fedV) Seq.empty
-          else {
-            val oldest = SnapTable.oldestRetainedVersion(s, tableDir)
-            // the walk reads manifest(fedV) as its base (fedV = 0 needs
-            // none); a retired base means retired TRANSITIONS — their
-            // events are gone, and silently skipping them would feed a
-            // consumer a hole
-            if ((fedV == 0 && oldest > 1) || (fedV > 0 && fedV < oldest))
-              throw new IllegalStateException(
-                s"SnapTable CDC feed: versions < $oldest of $tableDir " +
-                  s"were vacuumed but the feed cursor is at v$fedV — " +
-                  "the retired transitions' events are unreconstructible;" +
-                  " re-bootstrap the consumer from a snapshot read and " +
-                  "resume from the current version")
-            SnapTable.cdcIncremental(s, tableDir, key, cols, fedV, cur)
-              .collect().toSeq.map(r => CdcEvent(r.getLong(0),
-                r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-          }
-        onFeed(batchId, committed, events)
-        // the cursor advances only AFTER a successful delivery: a
-        // throwing onFeed leaves it un-advanced, so the within-run
-        // contract is at-least-once (the redelivered batch re-feeds the
-        // same window), never at-most-once; the persisted copy extends
-        // the same contract across restarts
-        if (cur > fedV) {
-          fedV = cur
-          writeFeedCursor(s, checkpointDir, cur)
+    startEach(docStream, Some(checkpointDir)) { (batch, batchId) =>
+      val s = batch.sparkSession
+      import graft.io.SnapTable
+      val committed = SnapTable.appendOnce(batch, tableDir, batchId)
+      val cur = SnapTable.currentVersion(s, tableDir)
+      val events =
+        if (cur <= fedV) Seq.empty
+        else {
+          val oldest = SnapTable.oldestRetainedVersion(s, tableDir)
+          // the walk reads manifest(fedV) as its base (fedV = 0 needs
+          // none); a retired base means retired TRANSITIONS — their
+          // events are gone, and silently skipping them would feed a
+          // consumer a hole
+          if ((fedV == 0 && oldest > 1) || (fedV > 0 && fedV < oldest))
+            throw new IllegalStateException(
+              s"SnapTable CDC feed: versions < $oldest of $tableDir " +
+                s"were vacuumed but the feed cursor is at v$fedV — " +
+                "the retired transitions' events are unreconstructible;" +
+                " re-bootstrap the consumer from a snapshot read and " +
+                "resume from the current version")
+          SnapTable.cdcIncremental(s, tableDir, key, cols, fedV, cur)
+            .collect().toSeq.map(r => CdcEvent(r.getLong(0),
+              r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
         }
+      onFeed(batchId, committed, events)
+      // the cursor advances only AFTER a successful delivery: a
+      // throwing onFeed leaves it un-advanced, so the within-run
+      // contract is at-least-once (the redelivered batch re-feeds the
+      // same window), never at-most-once; the persisted copy extends
+      // the same contract across restarts
+      if (cur > fedV) {
+        fedV = cur
+        writeFeedCursor(s, checkpointDir, cur)
       }
-      .start()
+    }
   }
 
   /** EXACTLY-ONCE streaming ingest + a maintained downstream REPLICA:
@@ -591,31 +563,28 @@ object DocStreams {
       replicaDir: String, checkpointDir: String, key: String,
       cols: Seq[String])(
       onApplied: (Long, Boolean, Int) => Unit): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        import graft.io.SnapTable
-        val committed = SnapTable.appendOnce(batch, sourceDir, batchId)
-        val cur = SnapTable.currentVersion(s, sourceDir)
-        var applied = SnapTable.lastAppliedCdcVersion(s, replicaDir)
-        val oldest = SnapTable.oldestRetainedVersion(s, sourceDir)
-        if ((applied == 0 && oldest > 1) || (applied > 0 && applied < oldest))
-          throw new IllegalStateException(
-            s"SnapTable replica: source versions < $oldest of $sourceDir " +
-              s"were vacuumed but the replica has applied only v$applied " +
-              "— the retired transitions are unreconstructible; " +
-              "re-bootstrap the replica from a snapshot read and resume " +
-              "from the current version")
-        while (applied < cur) {
-          SnapTable.applyCdcRows(s, replicaDir,
-            SnapTable.cdcRows(s, sourceDir, key, cols, applied, applied + 1),
-            key, applied + 1)
-          applied += 1
-        }
-        onApplied(batchId, committed, applied)
+    startEach(docStream, Some(checkpointDir)) { (batch, batchId) =>
+      val s = batch.sparkSession
+      import graft.io.SnapTable
+      val committed = SnapTable.appendOnce(batch, sourceDir, batchId)
+      val cur = SnapTable.currentVersion(s, sourceDir)
+      var applied = SnapTable.lastAppliedCdcVersion(s, replicaDir)
+      val oldest = SnapTable.oldestRetainedVersion(s, sourceDir)
+      if ((applied == 0 && oldest > 1) || (applied > 0 && applied < oldest))
+        throw new IllegalStateException(
+          s"SnapTable replica: source versions < $oldest of $sourceDir " +
+            s"were vacuumed but the replica has applied only v$applied " +
+            "— the retired transitions are unreconstructible; " +
+            "re-bootstrap the replica from a snapshot read and resume " +
+            "from the current version")
+      while (applied < cur) {
+        SnapTable.applyCdcRows(s, replicaDir,
+          SnapTable.cdcRows(s, sourceDir, key, cols, applied, applied + 1),
+          key, applied + 1)
+        applied += 1
       }
-      .start()
+      onApplied(batchId, committed, applied)
+    }
 
   /** AUDITED exactly-once streaming ingest — [[maintainSnapshotIngest]]
     * with a WRITE-AUDIT-PUBLISH gate per micro-batch: the drop lands as
@@ -648,81 +617,78 @@ object DocStreams {
   def maintainAuditedIngest(docStream: DataFrame, tableDir: String,
       checkpointDir: String)(audit: DataFrame => Boolean)(
       onResult: (Long, Boolean) => Unit): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        import graft.io.SnapTable
-        val applied = SnapTable.lastAppliedBatch(s, tableDir)
-        if (applied >= batchId)
-          onResult(batchId, false) // already applied (or superseded)
-        else {
-          SnapTable.sweepAbandonedStagings(s, tableDir, applied)
-          // SUPERSESSION GUARD around the whole stage→audit→publish
-          // cycle: once the winner's stamp covers this batch, a failure
-          // here is a superseded zombie — e.g. the winner's NEXT batch
-          // swept this twin's still-tagged staging mid-audit (tag ≤ its
-          // lastApplied), so the audit scan or publish would otherwise
-          // die on missing files. The batch IS in the table; report the
-          // TRUTHFUL outcome and keep the stream alive. Specifically:
-          // if OUR OWN staged id turns out stamped (publish committed,
-          // then e.g. its list cleanup threw), the outcome is
-          // published=true, not false; only NonFatal failures are
-          // caught (OOM/interrupt propagate); the recovery probes are
-          // Try-wrapped so a probe failure can't mask the original
-          // error; onResult fires exactly once, AFTER the cycle, so its
-          // own exceptions are never double-reported.
-          var stagedId: Option[String] = None
-          // our publish can only stamp a version committed AFTER this
-          // cycle started — bounds the recovery probe's manifest walk
-          // (stagedIdPublished is O(versions since downTo), and the
-          // staged list itself may already be swept when we need it)
-          val cycleBaseV = SnapTable.currentVersion(s, tableDir)
-          val outcome: Boolean =
-            try {
-              val id = SnapTable.stage(batch, tableDir,
-                tag = batchId.toString)
-              stagedId = Some(id)
-              // a 0-row drop has NOTHING TO AUDIT — depending on the
-              // writer it stages either an empty file list (readStaged
-              // then has no schema to serve) or 0-row files (the audit
-              // closure would aggregate over no rows — NULL mins under
-              // ANSI). Either way it publishes directly (an empty-add
-              // commit) so the batch ledger stays stamped instead of
-              // the stream dying on an empty wave.
-              val stagedRows =
-                if (SnapTable.stagedIsEmpty(s, tableDir, id)) None
-                else Some(SnapTable.readStaged(s, tableDir, id))
-              if (stagedRows.forall(df => df.isEmpty || audit(df))) {
-                val published = SnapTable.publish(s, tableDir, id,
-                  Map("batch_id" -> batchId.toString),
-                  skipIf =
-                    () => SnapTable.lastAppliedBatch(s, tableDir) >= batchId)
-                if (published.isEmpty) // a zombie twin won; ours never landed
-                  SnapTable.discard(s, tableDir, id)
-                published.isDefined
-              } else {
+    startEach(docStream, Some(checkpointDir)) { (batch, batchId) =>
+      val s = batch.sparkSession
+      import graft.io.SnapTable
+      val applied = SnapTable.lastAppliedBatch(s, tableDir)
+      if (applied >= batchId)
+        onResult(batchId, false) // already applied (or superseded)
+      else {
+        SnapTable.sweepAbandonedStagings(s, tableDir, applied)
+        // SUPERSESSION GUARD around the whole stage→audit→publish
+        // cycle: once the winner's stamp covers this batch, a failure
+        // here is a superseded zombie — e.g. the winner's NEXT batch
+        // swept this twin's still-tagged staging mid-audit (tag ≤ its
+        // lastApplied), so the audit scan or publish would otherwise
+        // die on missing files. The batch IS in the table; report the
+        // TRUTHFUL outcome and keep the stream alive. Specifically:
+        // if OUR OWN staged id turns out stamped (publish committed,
+        // then e.g. its list cleanup threw), the outcome is
+        // published=true, not false; only NonFatal failures are
+        // caught (OOM/interrupt propagate); the recovery probes are
+        // Try-wrapped so a probe failure can't mask the original
+        // error; onResult fires exactly once, AFTER the cycle, so its
+        // own exceptions are never double-reported.
+        var stagedId: Option[String] = None
+        // our publish can only stamp a version committed AFTER this
+        // cycle started — bounds the recovery probe's manifest walk
+        // (stagedIdPublished is O(versions since downTo), and the
+        // staged list itself may already be swept when we need it)
+        val cycleBaseV = SnapTable.currentVersion(s, tableDir)
+        val outcome: Boolean =
+          try {
+            val id = SnapTable.stage(batch, tableDir,
+              tag = batchId.toString)
+            stagedId = Some(id)
+            // a 0-row drop has NOTHING TO AUDIT — depending on the
+            // writer it stages either an empty file list (readStaged
+            // then has no schema to serve) or 0-row files (the audit
+            // closure would aggregate over no rows — NULL mins under
+            // ANSI). Either way it publishes directly (an empty-add
+            // commit) so the batch ledger stays stamped instead of
+            // the stream dying on an empty wave.
+            val stagedRows =
+              if (SnapTable.stagedIsEmpty(s, tableDir, id)) None
+              else Some(SnapTable.readStaged(s, tableDir, id))
+            if (stagedRows.forall(df => df.isEmpty || audit(df))) {
+              val published = SnapTable.publish(s, tableDir, id,
+                Map("batch_id" -> batchId.toString),
+                skipIf =
+                  () => SnapTable.lastAppliedBatch(s, tableDir) >= batchId)
+              if (published.isEmpty) // a zombie twin won; ours never landed
                 SnapTable.discard(s, tableDir, id)
-                false
-              }
-            } catch {
-              case scala.util.control.NonFatal(e) =>
-                val minePublished = stagedId.exists(sid => scala.util.Try(
-                  SnapTable.stagedIdPublished(s, tableDir, sid,
-                    downTo = cycleBaseV))
-                  .getOrElse(false))
-                val superseded = scala.util.Try(
-                  SnapTable.lastAppliedBatch(s, tableDir) >= batchId)
-                  .getOrElse(false)
-                if (!minePublished && !superseded) throw e
-                System.err.println(s"[graft] audited-ingest batch $batchId " +
-                  (if (minePublished)
-                    "committed; post-commit failure suppressed: "
-                  else "superseded mid-cycle; failure suppressed: ") + e)
-                minePublished
+              published.isDefined
+            } else {
+              SnapTable.discard(s, tableDir, id)
+              false
             }
-          onResult(batchId, outcome)
-        }
+          } catch {
+            case scala.util.control.NonFatal(e) =>
+              val minePublished = stagedId.exists(sid => scala.util.Try(
+                SnapTable.stagedIdPublished(s, tableDir, sid,
+                  downTo = cycleBaseV))
+                .getOrElse(false))
+              val superseded = scala.util.Try(
+                SnapTable.lastAppliedBatch(s, tableDir) >= batchId)
+                .getOrElse(false)
+              if (!minePublished && !superseded) throw e
+              System.err.println(s"[graft] audited-ingest batch $batchId " +
+                (if (minePublished)
+                  "committed; post-commit failure suppressed: "
+                else "superseded mid-cycle; failure suppressed: ") + e)
+              minePublished
+          }
+        onResult(batchId, outcome)
       }
-      .start()
+    }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import graft.ops.Det
+import graft.streaming.LocalCheckpointFiles.startEach
 
 /** Structured Streaming operators over the `events` schema — the streaming
   * twins of the batch queries q15 (tumbling window) and q16 (sessionize).
@@ -175,20 +176,18 @@ object EventStreams {
     * Aggregation state is bounded by the user-key cardinality (this is
     * the keyed-state contract; unbounded keys → use windowed totals). */
   def userTotalsToChangelog(events: DataFrame,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events
+      outDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+    val totals = events
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"), Det.dsum(col("value")).as("total_value"))
-      .writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-      }
-      .start()
+    startEach(totals, None, outputMode = "update") { (batch, batchId) =>
+      batch.withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(outDir)
+    }
+  }
 
   /** Latest-per-key compaction of the changelog written by
     * [[userTotalsToChangelog]]. */
@@ -468,25 +467,22 @@ object EventStreams {
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
     var daily = initialDaily.localCheckpoint()
     var lastApplied = initialBatchId
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastApplied) {
-          val inc = batch
-            .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-            .agg(count(lit(1)).as("n"))
-          daily = daily.withColumnRenamed("n", "on")
-            .join(inc.withColumnRenamed("n", "dn"),
-              Seq("event_type", "day"), "full_outer")
-            .select(col("event_type"), col("day"),
-              (coalesce(col("on"), lit(0L)) + coalesce(col("dn"), lit(0L)))
-                .as("n"))
-            .localCheckpoint()
-          lastApplied = batchId
-        }
-        sink(graft.queries.Advanced.changePointFromDaily(daily), batchId)
+    startEach(events, Some(checkpointDir)) { (batch, batchId) =>
+      if (batchId > lastApplied) {
+        val inc = batch
+          .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
+          .agg(count(lit(1)).as("n"))
+        daily = daily.withColumnRenamed("n", "on")
+          .join(inc.withColumnRenamed("n", "dn"),
+            Seq("event_type", "day"), "full_outer")
+          .select(col("event_type"), col("day"),
+            (coalesce(col("on"), lit(0L)) + coalesce(col("dn"), lit(0L)))
+              .as("n"))
+          .localCheckpoint()
+        lastApplied = batchId
       }
-      .start()
+      sink(graft.queries.Advanced.changePointFromDaily(daily), batchId)
+    }
   }
 
   /** Streaming robust-outlier-stats maintenance — q249's continuous
@@ -506,25 +502,22 @@ object EventStreams {
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
     var counts = initialCounts.localCheckpoint()
     var lastApplied = initialBatchId
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastApplied) {
-          val inc = graft.ext.Report.valueCounts(
-            batch.filter(col("value").isNotNull)
-              .select(col("event_type"), col("value")))
-          counts = counts.withColumnRenamed("c", "oc")
-            .join(inc.withColumnRenamed("c", "nc"),
-              Seq("event_type", "value"), "full_outer")
-            .select(col("event_type"), col("value"),
-              (coalesce(col("oc"), lit(0L)) + coalesce(col("nc"), lit(0L)))
-                .as("c"))
-            .localCheckpoint()
-          lastApplied = batchId
-        }
-        sink(graft.ext.Report.robustFromCounts(counts), batchId)
+    startEach(events, Some(checkpointDir)) { (batch, batchId) =>
+      if (batchId > lastApplied) {
+        val inc = graft.ext.Report.valueCounts(
+          batch.filter(col("value").isNotNull)
+            .select(col("event_type"), col("value")))
+        counts = counts.withColumnRenamed("c", "oc")
+          .join(inc.withColumnRenamed("c", "nc"),
+            Seq("event_type", "value"), "full_outer")
+          .select(col("event_type"), col("value"),
+            (coalesce(col("oc"), lit(0L)) + coalesce(col("nc"), lit(0L)))
+              .as("c"))
+          .localCheckpoint()
+        lastApplied = batchId
       }
-      .start()
+      sink(graft.ext.Report.robustFromCounts(counts), batchId)
+    }
   }
 
   /** Streaming quantile-sketch maintenance — q165's continuous twin:
@@ -542,24 +535,21 @@ object EventStreams {
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
     var cents = initialCents.localCheckpoint()
     var lastApplied = initialBatchId
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastApplied) {
-          val inc = batch
-            .select(floor(col("value") * 100).cast("long").as("c"))
-            .groupBy(col("c")).agg(count(lit(1)).as("cnt"))
-          cents = cents.withColumnRenamed("cnt", "oc")
-            .join(inc.withColumnRenamed("cnt", "ic"), Seq("c"), "full_outer")
-            .select(col("c"),
-              (coalesce(col("oc"), lit(0L)) + coalesce(col("ic"), lit(0L)))
-                .as("cnt"))
-            .localCheckpoint()
-          lastApplied = batchId
-        }
-        sink(graft.queries.Sketches.quantileSketchFromCents(
-          batch.sparkSession, cents), batchId)
+    startEach(events, Some(checkpointDir)) { (batch, batchId) =>
+      if (batchId > lastApplied) {
+        val inc = batch
+          .select(floor(col("value") * 100).cast("long").as("c"))
+          .groupBy(col("c")).agg(count(lit(1)).as("cnt"))
+        cents = cents.withColumnRenamed("cnt", "oc")
+          .join(inc.withColumnRenamed("cnt", "ic"), Seq("c"), "full_outer")
+          .select(col("c"),
+            (coalesce(col("oc"), lit(0L)) + coalesce(col("ic"), lit(0L)))
+              .as("cnt"))
+          .localCheckpoint()
+        lastApplied = batchId
       }
-      .start()
+      sink(graft.queries.Sketches.quantileSketchFromCents(
+        batch.sparkSession, cents), batchId)
+    }
   }
 }

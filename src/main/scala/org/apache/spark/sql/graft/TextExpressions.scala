@@ -350,6 +350,116 @@ case class WordSkipGrams(child: Expression, maxSkip: Int)
     copy(child = c)
 }
 
+/** Content-defined chunks of a words-array column in one pass per row:
+  * q186's chunker (and q188's, and the streaming chunk carry's) as one
+  * kernel. Token i starts a new chunk when its md5 bucket is 0, the
+  * bucket being the first 4 digest bytes as an unsigned int mod `mod`
+  * ([[graft.ext.Text.md5Bucket]]'s value); tokens before the first
+  * boundary form chunk 0, and chunk k (k >= 1) starts at the k-th
+  * boundary and runs to the token before the next one. Each chunk is
+  * (cid, n_tok, fp), fp the md5 hex of its tokens joined by one space.
+  *
+  * Value-identical to the declarative spelling it replaced (boundary
+  * positions by `filter(sequence(1, size(w)), ...)`, spans by
+  * `transform` over them, `md5(concat_ws(" ", slice(w, s, len)))`): a
+  * null token is never a boundary, counts in n_tok and is skipped in
+  * the digest, exactly as concat_ws skips it. An empty array has no
+  * chunks (`split` never yields one). The declarative form evaluated an
+  * INTERPRETED lambda per token and per chunk and needed two checkpoint
+  * barriers to stop CollapseProject re-splitting the text per element;
+  * here the text is tokenized once and each token hashed once. */
+case class CdcChunks(child: Expression, mod: Long) extends UnaryExpression
+    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  require(mod >= 1, s"cdc_chunks: mod must be >= 1, got $mod")
+
+  override def dataType: DataType = CdcChunks.Type
+  override def prettyName: String = "cdc_chunks"
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case org.apache.spark.sql.types.ArrayType(StringType, _) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"cdc_chunks requires ARRAY<STRING>, got ${other.sql}")
+    }
+
+  override def nullSafeEval(v: Any): Any = {
+    val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    val n = arr.numElements()
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val words = new Array[UTF8String](n)
+    // 0-based positions of the tokens that start a chunk k >= 1
+    val bpos = new Array[Int](n)
+    var nb = 0
+    var i = 0
+    while (i < n) {
+      val w = if (arr.isNullAt(i)) null else arr.getUTF8String(i)
+      words(i) = w
+      if (w != null) {
+        val d = md.digest(w.getBytes)
+        val b = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
+          ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+        if (b % mod == 0) { bpos(nb) = i; nb += 1 }
+      }
+      i += 1
+    }
+    // chunk 0 holds the tokens before the first boundary, if any
+    val head = if (n > 0 && (nb == 0 || bpos(0) > 0)) 1 else 0
+    val out = new Array[Any](head + nb)
+    def chunk(cid: Int, s: Int, e: Int): Unit = {
+      var j = s
+      var first = true
+      while (j < e) {
+        val w = words(j)
+        if (w != null) {
+          if (!first) md.update(CdcChunks.Sep)
+          md.update(w.getBytes)
+          first = false
+        }
+        j += 1
+      }
+      out(cid - 1 + head) = new org.apache.spark.sql.catalyst.expressions
+        .GenericInternalRow(Array[Any](cid.toLong, (e - s).toLong,
+          CdcChunks.hex(md.digest())))
+    }
+    if (head == 1) chunk(0, 0, if (nb > 0) bpos(0) else n)
+    var k = 0
+    while (k < nb) {
+      chunk(k + 1, bpos(k), if (k + 1 < nb) bpos(k + 1) else n)
+      k += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+}
+
+object CdcChunks {
+  /** ARRAY<STRUCT<cid BIGINT, n_tok BIGINT, fp STRING>>, nothing null. */
+  val Type: DataType = {
+    import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+    ArrayType(StructType(Seq(
+      StructField("cid", LongType, nullable = false),
+      StructField("n_tok", LongType, nullable = false),
+      StructField("fp", StringType, nullable = false))), containsNull = false)
+  }
+
+  private val Sep = Array[Byte](' ')
+  private val Hex = "0123456789abcdef".getBytes
+
+  private def hex(d: Array[Byte]): UTF8String = {
+    val out = new Array[Byte](d.length * 2)
+    var i = 0
+    while (i < d.length) {
+      out(2 * i) = Hex((d(i) >> 4) & 0xf)
+      out(2 * i + 1) = Hex(d(i) & 0xf)
+      i += 1
+    }
+    UTF8String.fromBytes(out)
+  }
+}
+
 object LangId {
   /** Top function words per language (standard frequency lists). Order
     * fixed → deterministic tie-breaking. */

@@ -1236,6 +1236,60 @@ class StreamingSpec extends SparkSpec {
     assert(latest.map(_._3).sum > 0, "no duplicate passages in the stream")
   }
 
+  test("a chunk-carry checkpoint restarts across Spark's default and the local checkpoint manager") {
+    import graft.ext.Text
+    import graft.streaming.{DocStreams, LocalCheckpointFiles}
+    val key = LocalCheckpointFiles.ConfKey
+    val sparkDefault = classOf[org.apache.spark.sql.execution.streaming
+      .checkpointing.FileContextBasedCheckpointFileManager].getName
+    val docs = Tables.documents(spark, sf).localCheckpoint(eager = false)
+    def slice(r: Int) = docs.filter(col("doc_id") % 4 === r)
+    def report(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+        r.getLong(3))).toSet
+    // waves 1+2 under `first`; wave 3 lands while the carry is down; the
+    // restart runs under `second` (None: the start helper's choice)
+    def run(first: Option[String], second: Option[String]) = {
+      def use(m: Option[String]): Unit =
+        m.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      val dropsDir = Files.createTempDirectory("graft-cdcm-drops").toString
+      val ckpt = Files.createTempDirectory("graft-cdcm-ckpt").toString
+      slice(1).coalesce(1).write.mode("overwrite").parquet(dropsDir)
+      slice(2).coalesce(1).write.mode("append").parquet(dropsDir)
+      val waves = scala.collection.mutable.ArrayBuffer.empty[
+        (Long, Set[(String, Long, Long, Long)])]
+      def start(seed: org.apache.spark.sql.DataFrame) =
+        DocStreams.maintainChunkIndex(
+          DocStreams.readDocStream(spark, dropsDir, maxFilesPerTrigger = 1),
+          Text.chunkRelationOf(seed), ckpt) { (m, id) =>
+          this.synchronized { waves += ((id, report(m))) }
+        }
+      use(first)
+      val q1 = start(slice(0))
+      try q1.processAllAvailable() finally q1.stop()
+      assert(spark.conf.get(key) ===
+        first.getOrElse(classOf[LocalCheckpointFiles].getName))
+      slice(3).coalesce(1).write.mode("append").parquet(dropsDir)
+      use(second)
+      val q2 = start(docs.filter(col("doc_id") % 4 <= 2))
+      try q2.processAllAvailable() finally q2.stop()
+      waves.toSeq
+    }
+    val saved = spark.conf.getOption(key)
+    try {
+      val toLocal = run(Some(sparkDefault), None)
+      val toDefault = run(None, Some(sparkDefault))
+      // batch ids continue across the restart: each run read the other
+      // manager's offsets and commit logs rather than starting over
+      assert(toLocal.map(_._1) === Seq(0L, 1L, 2L))
+      assert(toLocal === toDefault)
+      assert(toLocal(1)._2 === report(Text.cdcReportOf(Text.chunkRelationOf(
+        docs.filter(col("doc_id") % 4 <= 2)))))
+      assert(toLocal(2)._2 === report(Text.cdcReportOf(Text.chunkRelationOf(
+        docs))))
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("streaming quantile sketch: per-wave report equals batch q165 recompute; restart re-seeds") {
     val ev = Tables.events(spark, sf)
       .select("event_id", "ts", "user_id", "event_type", "value")

@@ -445,6 +445,80 @@ class TextSpec extends SparkSpec {
       Seq(("a", 3L, 1L, 4L), ("b", 1L, 1L, 5L)))
   }
 
+  /** q186's chunker as spelled before the CdcChunks kernel: boundary
+    * positions by a filtered position sequence, chunk spans by an indexed
+    * transform, fingerprints by slice + concat_ws, behind the two barriers
+    * that kept CollapseProject from re-splitting the text per element. */
+  private def declarativeChunks(docs: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions._
+    val toks = docs
+      .select(col("doc_id"), col("source"), split(col("text"), " ").as("w"))
+      .localCheckpoint(eager = false)
+    val withB = toks.select(col("doc_id"), col("source"), col("w"),
+        filter(sequence(lit(1), size(col("w"))),
+          p => Text.md5Bucket(element_at(col("w"), p), 8L) === 0L).as("bpos"))
+      .localCheckpoint(eager = false)
+    val n = size(col("w"))
+    val bpos = col("bpos")
+    val head = when(coalesce(try_element_at(bpos, lit(1)), lit(0)) =!= 1,
+      array(struct(lit(0L).as("cid"), lit(1).as("s"),
+        coalesce(try_element_at(bpos, lit(1)) - 1, n).as("e"))))
+      .otherwise(array().cast("array<struct<cid:bigint,s:int,e:int>>"))
+    val rest = transform(bpos, (b, i) =>
+      struct((i + 1).cast("long").as("cid"), b.as("s"),
+        coalesce(try_element_at(bpos, i + 2) - 1, n).as("e")))
+    withB
+      .select(col("doc_id"), col("source"), col("w"),
+        explode(concat(head, rest)).as("c"))
+      .select(col("doc_id"), col("source"), col("c.cid").as("cid"),
+        (col("c.e") - col("c.s") + 1).cast("long").as("n_tok"),
+        md5(concat_ws(" ",
+          slice(col("w"), col("c.s"), col("c.e") - col("c.s") + 1)))
+          .as("fp"))
+  }
+
+  test("q186: the CdcChunks kernel equals the declarative chunker") {
+    def bucket(w: String): Long = {
+      val d = java.security.MessageDigest.getInstance("MD5")
+        .digest(w.getBytes("UTF-8"))
+      java.lang.Long.parseLong(
+        d.take(4).map(b => f"${b & 0xff}%02x").mkString, 16) % 8
+    }
+    val words = (0 until 400).map(i => s"t$i")
+    val cuts = words.filter(bucket(_) == 0).take(4)
+    val plain = words.filter(bucket(_) != 0).take(5)
+    assert(cuts.size == 4 && plain.size == 5)
+    val edge = Seq[Option[String]](
+      Some(""), Some(plain(0)), Some(cuts(0)), None,
+      Some(s"${plain(0)}  ${plain(1)}"), Some(s"${cuts(0)}  ${cuts(1)} "),
+      Some(cuts.mkString(" ")), Some(plain.mkString(" ")),
+      Some((cuts.take(2) ++ plain.take(2) ++ cuts.drop(2) ++ plain).mkString(" ")),
+      Some((plain.take(2) ++ cuts ++ plain.drop(2)).mkString(" ")))
+      .zipWithIndex.map { case (t, i) => (-1L - i, s"edge$i", t) }
+      .toDF("doc_id", "source", "text")
+    val docs = graft.tables.Tables.documents(spark, sf)
+      .select(col("doc_id"), col("source"), col("text"))
+      .unionByName(edge)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0001"))
+    val got = Text.chunkRelationOf(docs)
+    val want = declarativeChunks(docs)
+    assert(got.schema.map(f => (f.name, f.dataType)) ===
+      want.schema.map(f => (f.name, f.dataType)))
+    val g = rows(got)
+    assert(g === rows(want))
+    // every edge row but the null text chunks; the corpus rows are there
+    assert(g.map(_.head).toSet ===
+      ((-10L to -1L).toSet - -4L) ++ docs.filter(col("doc_id") >= 0)
+        .select("doc_id").as[Long].collect().toSet)
+    // nullability: the kernel's cid, n_tok and fp are never null; the old
+    // spelling marked cid and n_tok nullable (its struct fields merged
+    // through concat, and size() of a null array is null), never holding
+    // a null in either
+    assert(got.schema.map(_.nullable) === Seq(true, true, false, false, false))
+    assert(want.schema.map(_.nullable) === Seq(true, true, true, true, false))
+  }
+
   test("q188: passage-level source matrix replays driver-side") {
     def bucket(w: String): Long = {
       val d = java.security.MessageDigest.getInstance("MD5")
